@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine import cells, joins, synth
+from engine import cells, joins, local, synth
 
 
 # ---------------------------------------------------------------------------
@@ -451,26 +451,6 @@ def q_dim_decode_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.join(F.broadcast(dim), "event_type", "left")
         .groupBy("label")
         .agg(F.count("*").alias("n"))
-    )
-
-
-def q_pip_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 graft — PIP join against rectangular regions (broadcast dim + containment);
-    rectangle variant is the SQL-expressible twin of the ray-cast PIP."""
-    pts = _docs_points(spark, sf_dir)
-    rects = spark.createDataFrame(
-        [(i, -180.0 + i * 45.0, -90.0 + i * 20.0, -180.0 + i * 45.0 + 60.0,
-          -90.0 + i * 20.0 + 50.0) for i in range(8)],
-        ["rect_id", "lon0", "lat0", "lon1", "lat1"],
-    )
-    cond = (
-        (F.col("lon") >= F.col("lon0")) & (F.col("lon") < F.col("lon1"))
-        & (F.col("lat") >= F.col("lat0")) & (F.col("lat") < F.col("lat1"))
-    )
-    return (
-        pts.join(F.broadcast(rects), cond, "inner")
-        .groupBy(F.col("rect_id").cast("long").alias("rect_id"))
-        .agg(F.count("*").alias("n_points"))
     )
 
 
@@ -1022,12 +1002,13 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE raster build + persist feeds all four halves (hot, pyr, ter, d8)
     # — previously each half re-rasterized the document anchors (4 scans)
     tiles_r = _hotspot_tiles(spark, sf_dir).persist()
-    # warm the shared cache with ONE action so the concurrent chains below
-    # don't race to materialize it; the Arrow fetch of the (tiny, registry-
-    # fixed 512-px) raster lets every one-shot halo pass over tiles_r run
-    # driver-side with identical output (focal._halo_apply_driver — r6)
-    tiles_r.count()
-    tiles_r._halo_driver_pdf = tiles_r.toPandas()
+    # ONE action warms the shared cache, so the concurrent chains below
+    # don't race to materialize it, and fetches the (tiny, registry-fixed
+    # 512-px) raster: carried on tiles_r, it lets every one-shot halo pass
+    # over tiles_r run driver-side with identical output (engine.local,
+    # focal._halo_apply_driver)
+    raster = local.fetch(tiles_r)
+    tiles_r = local.carry(tiles_r, raster)
     grads = terrain.terrain_gradients(tiles_r, res)
     ed = terrain.flow_edges(terrain.d8_flow(tiles_r, res), res).persist()
     # the CC loop (iterative, driver actions) overlaps the terrain fixpoint
@@ -1131,31 +1112,21 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).cast("long").alias("e"),
         )
     )
-    src_tiles = tiles_r.select(
-        "tx", "ty",
-        F.transform(
-            "counts",
-            lambda c: F.when(c >= _EDT_MIN_Z, c)
-            .otherwise(F.lit(0)).cast("long"),
-        ).alias("counts"),
-    )
-    # same threshold mask applied to the collected frame so the radius-6
-    # EDT halo pass rides the driver path too (exact integer compare —
-    # identical values either way)
-    import numpy as _np
-    import pandas as _pd
+    # EDT sources: the raster thresholded at _EDT_MIN_Z, built on the driver
+    # from the carried raster so the radius-6 EDT halo pass runs there too
+    import numpy as np
+    import pyarrow.compute as pc
 
-    _tp = tiles_r._halo_driver_pdf
-    src_tiles._halo_driver_pdf = _pd.DataFrame({
-        "tx": _tp["tx"], "ty": _tp["ty"],
-        "counts": [
-            _np.where(
-                _np.asarray(c, dtype=_np.int64) >= _EDT_MIN_Z,
-                _np.asarray(c, dtype=_np.int64), 0
-            ).tolist()
-            for c in _tp["counts"]
-        ],
-    })
+    z = pc.list_flatten(raster["counts"]).to_numpy().reshape(-1, res * res)
+    src_tiles = local.build(
+        spark,
+        {
+            "tx": raster["tx"],
+            "ty": raster["ty"],
+            "counts": list(np.where(z >= _EDT_MIN_Z, z, 0)),
+        },
+        "tx long, ty long, counts array<long>",
+    )
     edt = (
         terrain.distance_transform(
             src_tiles, res, radius=_VIS_RADIUS, allocate=True

@@ -346,34 +346,6 @@ def compact_unroll_sql(cells_cte: str, from_res: int, to_res: int) -> str:
     return "WITH " + ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(kept_selects)
 
 
-def grid_center_lon(cell: Column, res: int) -> Column:
-    _check_res(res)
-    return (grid_ix(cell).cast("double") + 0.5) / float(2**res) * 360.0 - 180.0
-
-
-def grid_center_lat(cell: Column, res: int) -> Column:
-    _check_res(res)
-    return (grid_iy(cell).cast("double") + 0.5) / float(2**res) * 180.0 - 90.0
-
-
-def grid_bounds(cell: Column, res: int) -> Column:
-    """struct<min:struct<lon,lat>, max:struct<lon,lat>> bounds of the cell."""
-    _check_res(res)
-    n = float(2**res)
-    ix = grid_ix(cell).cast("double")
-    iy = grid_iy(cell).cast("double")
-    return F.struct(
-        F.struct(
-            (ix / n * 360.0 - 180.0).alias("lon"),
-            (iy / n * 180.0 - 90.0).alias("lat"),
-        ).alias("min"),
-        F.struct(
-            ((ix + 1.0) / n * 360.0 - 180.0).alias("lon"),
-            ((iy + 1.0) / n * 180.0 - 90.0).alias("lat"),
-        ).alias("max"),
-    )
-
-
 def grid_disk(cell: Column, k: int, res: int) -> Column:
     """Array of all cells within Chebyshev distance k (the (2k+1)^2 block).
 

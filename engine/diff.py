@@ -67,26 +67,6 @@ def has_geometry(tags: Column, type_col: Column) -> Column:
     )
 
 
-def normalize_children(type_col: Column, nds: Column, members: Column) -> Column:
-    """Uniform children view (ObjectVersion.scala:28-32, NodeRef.scala:6-10):
-    way nds -> MemberRef('node', ref, ''); relation members as-is; nodes none."""
-    return (
-        F.when(
-            type_col == "way",
-            F.transform(
-                nds,
-                lambda x: F.struct(
-                    F.lit("node").alias("type"),
-                    x.getField("ref").alias("ref"),
-                    F.lit("").alias("role"),
-                ),
-            ),
-        )
-        .when(type_col == "relation", members)
-        .otherwise(_empty_children())
-    )
-
-
 def _point_bbox(lon: Column, lat: Column) -> Column:
     """Change.lonLatToBbox (Change.scala:52-55): degenerate bbox, null if no coords."""
     return F.when(

@@ -43,9 +43,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from engine import local
 
 
 def _focal_sum_scatter(tiles: DataFrame, res: int, radius: int) -> DataFrame:
@@ -158,82 +161,67 @@ def _box_sums(grid: np.ndarray, res: int, r: int) -> np.ndarray:
     return ii[w:, w:] - ii[:-w, w:] - ii[w:, :-w] + ii[:-w, :-w]
 
 
+def _np_grids(table, res: int) -> dict:
+    """(tx, ty, counts) Arrow table -> {(tx, ty): res x res int64 grid}, in
+    row order."""
+    keys = zip(table["tx"].to_pylist(), table["ty"].to_pylist())
+    flat = pc.list_flatten(table["counts"]).to_numpy()
+    return dict(zip(keys, flat.reshape(-1, res, res)))
+
+
+def _np_halos(grids: dict, res: int, r: int):
+    """Yield ((tx, ty), halo, mask) per tile of `grids`: the same zero-padded
+    (res+2r)^2 halo + presence mask _halo_apply's strip shuffle assembles,
+    built with numpy slices from the neighbor grids. The one driver-side
+    halo assembler (_halo_apply_driver, terrain._driver_fixpoint)."""
+    pad = res + 2 * r
+    # (offset, neighbor rows/cols adjacent to this tile, halo rows/cols)
+    sides = {
+        1: (slice(0, r), slice(r + res, pad)),
+        -1: (slice(res - r, res), slice(0, r)),
+        0: (slice(0, res), slice(r, r + res)),
+    }
+    for (tx, ty), grid in grids.items():
+        halo = np.zeros((pad, pad), dtype=np.int64)
+        mask = np.zeros((pad, pad), dtype=np.int64)
+        for dx in (-1, 0, 1):
+            for dy in (-1, 0, 1):
+                nb = grids.get((tx + dx, ty + dy))
+                if nb is None:
+                    continue
+                (ys, hy), (xs, hx) = sides[dy], sides[dx]
+                halo[hy, hx] = nb[ys, xs]
+                mask[hy, hx] = 1
+        yield (tx, ty), halo, mask
+
+
 def _halo_apply_driver(
-    spark, pdf, res: int, r: int, finish, fields=None,
+    spark, table, res: int, r: int, finish, fields=None,
     pass_key: bool = False,
 ) -> DataFrame:
-    """Driver-side twin of _halo_apply for pre-collected small rasters: the
-    same zero-padded (res+2r)^2 halo + presence mask per tile, assembled
-    with numpy slices from the neighbor grids instead of a strip shuffle,
-    and the same `finish` kernel — output rows and schema identical. Used
-    when the caller attaches a pandas frame of (tx, ty, counts) as
-    `df._halo_driver_pdf` (the cover `_pip_used_res` attribute idiom); the
-    distributed path keeps parity coverage in tests/test_terrain.py."""
-    keys = [(int(t), int(y)) for t, y in zip(pdf["tx"], pdf["ty"])]
-    grids = {
-        k: np.asarray(c, dtype=np.int64).reshape(res, res)
-        for k, c in zip(keys, pdf["counts"])
-    }
-    pad = res + 2 * r
+    """Driver-side twin of _halo_apply for a carried (engine.local) raster:
+    the same halo + presence mask per tile (_np_halos) and the same `finish`
+    kernel — output rows and schema identical, returned as a local relation
+    that carries its own table. The distributed path keeps parity coverage
+    in tests/test_terrain.py."""
     out_fields = (
         [("focal", T.ArrayType(T.LongType()))] if fields is None else fields
     )
     names = [n for n, _ in out_fields]
     rows = {"tx": [], "ty": [], **{n: [] for n in names}}
-    for (tx, ty) in keys:
-        halo = np.zeros((pad, pad), dtype=np.int64)
-        mask = np.zeros((pad, pad), dtype=np.int64)
-        halo[r : r + res, r : r + res] = grids[(tx, ty)]
-        mask[r : r + res, r : r + res] = 1
-        for dx in (-1, 0, 1):
-            for dy in (-1, 0, 1):
-                if dx == 0 and dy == 0:
-                    continue
-                nb = grids.get((tx + dx, ty + dy))
-                if nb is None:
-                    continue
-                ys = (
-                    slice(0, r) if dy == 1
-                    else slice(res - r, res) if dy == -1
-                    else slice(0, res)
-                )
-                xs = (
-                    slice(0, r) if dx == 1
-                    else slice(res - r, res) if dx == -1
-                    else slice(0, res)
-                )
-                hy = (
-                    slice(r + res, pad) if dy == 1
-                    else slice(0, r) if dy == -1
-                    else slice(r, r + res)
-                )
-                hx = (
-                    slice(r + res, pad) if dx == 1
-                    else slice(0, r) if dx == -1
-                    else slice(r, r + res)
-                )
-                halo[hy, hx] = nb[ys, xs]
-                mask[hy, hx] = 1
-        result = (
-            finish(halo, mask, (tx, ty)) if pass_key else finish(halo, mask)
-        )
+    for key, halo, mask in _np_halos(_np_grids(table, res), res, r):
+        result = finish(halo, mask, key) if pass_key else finish(halo, mask)
         if fields is None:
             result = {"focal": result.tolist()}
-        rows["tx"].append(tx)
-        rows["ty"].append(ty)
+        rows["tx"].append(key[0])
+        rows["ty"].append(key[1])
         for n in names:
             rows[n].append(result[n])
     schema = T.StructType(
         [T.StructField("tx", T.LongType()), T.StructField("ty", T.LongType())]
         + [T.StructField(n, t) for n, t in out_fields]
     )
-    out_pdf = pd.DataFrame(rows)
-    out = spark.createDataFrame(out_pdf, schema)
-    # generic driver-composition hook: downstream operators that can run
-    # their own kernels on an already-collected frame (e.g.
-    # flow_accumulation's stage 1) read this (r6)
-    out._driver_pdf = out_pdf
-    return out
+    return local.build(spark, rows, schema)
 
 
 def _halo_apply(
@@ -255,13 +243,13 @@ def _halo_apply(
     argument (kernels that need the tile's GLOBAL position, e.g. viewshed
     locating broadcast observers in patch coordinates).
 
-    r6: a caller that has already collected a small raster can attach the
-    pandas frame as `tiles._halo_driver_pdf`; the whole exchange+kernel
-    then runs driver-side with identical output (see _halo_apply_driver)."""
-    drv = getattr(tiles, "_halo_driver_pdf", None)
-    if drv is not None and r <= res:
+    A `tiles` frame that carries its Arrow table (engine.local) runs the
+    whole exchange + kernel driver-side with identical output (see
+    _halo_apply_driver)."""
+    table = local.carried(tiles)
+    if table is not None and r <= res:
         return _halo_apply_driver(
-            tiles.sparkSession, drv, res, r, finish, fields, pass_key
+            tiles.sparkSession, table, res, r, finish, fields, pass_key
         )
     strips = _strip_exprs(res, r)
     contrib = F.array(

@@ -28,9 +28,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from engine import local
+
 # diagnostics only: rounds the last connected_components call needed to
 # converge (read by tools/bench_kernels.py part_graph; not part of the API)
 LAST_ROUNDS = 0
+
+# bounded-side driver fast path: a canonical edge set at or under this many
+# rows is an O(MB) Arrow fetch (engine.local) — one vectorized numpy
+# hook-and-compress union-find on the driver replaces the whole star-round
+# loop (each round = a full Spark job; at bench scale the rounds were pure
+# driver latency). Labels are identical by construction: comp = min node id
+# of the component. Tests force the distributed loop by monkeypatching this
+# to 0.
+_DRIVER_EDGES = 1_000_000
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -151,14 +162,6 @@ def connected_components(
     # documented 56M-edge OOM fix (deserialized localCheckpoint blocks
     # stacking across rounds on an 8g heap).
     _SMALL_EDGES = 4_000_000
-    # bounded-side driver fast path (the flow_accumulation stage2='driver' /
-    # knn broadcast-short-circuit discipline): a canonical edge set at or
-    # under this many rows is an O(MB) Arrow fetch — one vectorized numpy
-    # hook-and-compress union-find on the driver replaces the whole star-
-    # round loop (each round = a full Spark job; at bench scale the rounds
-    # were pure driver-latency). Labels are identical by construction:
-    # comp = min node id of the component.
-    _DRIVER_EDGES = 1_000_000
     e = _canonical(
         edges.select(
             F.col(src).cast("long").alias("u"),
@@ -176,9 +179,9 @@ def connected_components(
         import numpy as np
 
         LAST_ROUNDS = 0
-        pdf = e.toPandas()
-        u = pdf["u"].to_numpy(dtype=np.int64)
-        v = pdf["v"].to_numpy(dtype=np.int64)
+        table = local.fetch(e)
+        u = table["u"].to_numpy()
+        v = table["v"].to_numpy()
         ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
         a, b = inv[: len(u)], inv[len(u):]
         parent = np.arange(len(ids), dtype=np.int64)
@@ -194,10 +197,8 @@ def connected_components(
                 if np.array_equal(pp, parent):
                     break
                 parent = pp
-        import pandas as pd
-
-        labels = e.sparkSession.createDataFrame(
-            pd.DataFrame({"id": ids, "comp": ids[parent]}),
+        labels = local.build(
+            e.sparkSession, {"id": ids, "comp": ids[parent]},
             "id long, comp long",
         )
     else:

@@ -284,32 +284,6 @@ def segments_intersect_expr(ax, ay, bx, by, cx, cy, dx, dy) -> Column:
     return proper | touch
 
 
-def segments_intersect_sql(ax, ay, bx, by, cx, cy, dx, dy) -> str:
-    """DuckDB twin of segments_intersect_expr over the named columns."""
-    def o(px, py, qx, qy, rx, ry):
-        return f"(({qx})-({px}))*(({ry})-({py})) - (({qy})-({py}))*(({rx})-({px}))"
-
-    o1 = o(ax, ay, bx, by, cx, cy)
-    o2 = o(ax, ay, bx, by, dx, dy)
-    o3 = o(cx, cy, dx, dy, ax, ay)
-    o4 = o(cx, cy, dx, dy, bx, by)
-
-    def btw(px, py, qx, qy, rx, ry):
-        return (
-            f"(LEAST({px},{qx}) <= ({rx}) AND ({rx}) <= GREATEST({px},{qx})"
-            f" AND LEAST({py},{qy}) <= ({ry}) AND ({ry}) <= GREATEST({py},{qy}))"
-        )
-
-    return f"""(
-        (((({o1}) > 0 AND ({o2}) < 0) OR (({o1}) < 0 AND ({o2}) > 0))
-         AND ((({o3}) > 0 AND ({o4}) < 0) OR (({o3}) < 0 AND ({o4}) > 0)))
-        OR (({o1}) = 0 AND {btw(ax, ay, bx, by, cx, cy)})
-        OR (({o2}) = 0 AND {btw(ax, ay, bx, by, dx, dy)})
-        OR (({o3}) = 0 AND {btw(cx, cy, dx, dy, ax, ay)})
-        OR (({o4}) = 0 AND {btw(cx, cy, dx, dy, bx, by)})
-    )"""
-
-
 def line_intersection_join(
     lines_a: DataFrame,
     lines_b: DataFrame,

@@ -47,6 +47,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from engine import local
+
 # packed label = dist * HOPS_BASE + hops. dist and hops are both
 # non-negative; hops < HOPS_BASE is guaranteed by max_rounds <= HOPS_BASE-1,
 # and dist < 2^63 / HOPS_BASE ~= 8.8e12 is checked against max_dist when
@@ -56,16 +58,15 @@ HOPS_BASE = 1 << 20
 # diagnostics: rounds the last shortest_paths call ran (read by benches)
 LAST_ROUNDS = 0
 
-# Bounded-side driver fast path (the engine-wide discipline: knn broadcast
-# short-circuit, flow_accumulation stage2='driver', graph.connected_components
-# / terrain._halo_fixpoint r6 driver solves): a deduped edge frame at or
-# under this many rows is an O(MB) Arrow fetch, and each frontier round is a
-# vectorized numpy relaxation instead of a full Spark job — at registry
-# scale the distributed rounds were pure driver latency. The replay below
-# mirrors the distributed loop round for round (same candidate caps, same
-# improved sets, same round counts and error contract), so results are
-# identical by construction; pytest forces the distributed path for
-# dedicated coverage by monkeypatching this to 0.
+# Bounded-side driver fast path (engine.local; the same gate shape as
+# graph.connected_components and terrain._halo_fixpoint): a deduped edge
+# frame at or under this many rows is an O(MB) Arrow fetch, and each frontier
+# round is a vectorized numpy relaxation instead of a full Spark job — at
+# registry scale the distributed rounds were pure driver latency. The
+# replay below mirrors the distributed loop round for round (same candidate
+# caps, same improved sets, same round counts and error contract), so
+# results are identical by construction; pytest forces the distributed path
+# for dedicated coverage by monkeypatching this to 0.
 DRIVER_EDGES = 1_000_000
 
 
@@ -189,40 +190,35 @@ def shortest_paths(
 
     global LAST_ROUNDS
     if stats["n"] <= DRIVER_EDGES:
-        spark = edges.sparkSession
-        import pandas as pd
-
-        pdf = e.toPandas()  # reads the agg-materialized checkpoint
-        srows = s.collect()
-        eu_ids = pdf["u"].to_numpy(dtype=np.int64)
-        ev_ids = pdf["v"].to_numpy(dtype=np.int64)
-        ew = pdf["w"].to_numpy(dtype=np.int64)
-        sids = sorted({int(r["sid"]) for r in srows})
-        sidx = {x: i for i, x in enumerate(sids)}
-        src_nodes = np.asarray([int(r["n"]) for r in srows], dtype=np.int64)
-        nodes = np.unique(np.concatenate([eu_ids, ev_ids, src_nodes]))
+        table = local.fetch(e)  # reads the agg-materialized checkpoint
+        srcs = local.fetch(s)
+        eu_ids = table["u"].to_numpy()
+        ev_ids = table["v"].to_numpy()
+        ew = table["w"].to_numpy()
+        s_sid = srcs["sid"].to_numpy()
+        s_n = srcs["n"].to_numpy()
+        sids, s_row = np.unique(s_sid, return_inverse=True)
+        nodes = np.unique(np.concatenate([eu_ids, ev_ids, s_n]))
         eu = np.searchsorted(nodes, eu_ids)
         ev = np.searchsorted(nodes, ev_ids)
         INF = 1 << 62
         labels = np.full((len(sids), len(nodes)), INF, dtype=np.int64)
-        for r in srows:
-            labels[sidx[int(r["sid"])], int(np.searchsorted(nodes, r["n"]))] = 0
+        labels[s_row, np.searchsorted(nodes, s_n)] = 0
         labels, LAST_ROUNDS = _np_frontier_bf(
             eu, ev, ew * HOPS_BASE + 1, labels, max_dist, max_rounds,
             "shortest_paths",
         )
         si, ni = np.nonzero(labels < INF)
         key = labels[si, ni]
-        out = pd.DataFrame(
+        return local.build(
+            edges.sparkSession,
             {
-                "source_id": np.asarray(sids, dtype=np.int64)[si],
+                "source_id": sids[si],
                 "node": nodes[ni],
                 "dist": key >> 20,
                 "hops": key % HOPS_BASE,
-            }
-        )
-        return spark.createDataFrame(
-            out, "source_id long, node long, dist long, hops long"
+            },
+            "source_id long, node long, dist long, hops long",
         )
     # settled: best packed label per (sid, n) found so far
     settled = s.withColumn("key", F.lit(0).cast("long")).localCheckpoint(
@@ -340,9 +336,11 @@ def point_to_point(
     if check_negative and stats["neg"]:
         raise ValueError("point_to_point requires non-negative weights")
     if stats["n"] <= DRIVER_EDGES:
-        return _p2p_driver(
-            spark, e2, int(source), int(target), max_dist, max_rounds
+        # reads the agg-materialized checkpoint
+        mu = _p2p_driver(
+            local.fetch(e2), int(source), int(target), max_dist, max_rounds
         )
+        return _p2p_row(spark, int(target), mu, max_dist)
     settled = spark.createDataFrame(
         [(0, int(source), 0), (1, int(target), 0)], "dir int, n long, key long"
     ).localCheckpoint(eager=False)
@@ -422,34 +420,41 @@ def point_to_point(
             f"point_to_point: not settled after {max_rounds} rounds; raise "
             "max_rounds or bound the query with max_dist"
         )
-    if mu >= INF or (max_dist is not None and mu >= (max_dist + 1) * HOPS_BASE):
-        return spark.createDataFrame(
-            [], "source_id long, node long, dist long, hops long"
-        )
-    return spark.createDataFrame(
-        [(0, int(target), int(mu) // HOPS_BASE, int(mu) % HOPS_BASE)],
-        "source_id long, node long, dist long, hops long",
+    return _p2p_row(spark, int(target), mu, max_dist)
+
+
+def _p2p_row(spark, target: int, mu: int, max_dist: int | None) -> DataFrame:
+    """point_to_point's result: one (0, target, dist, hops) row for the
+    best meeting label mu, none if unreachable or beyond max_dist."""
+    if mu >= (1 << 62) or (
+        max_dist is not None and mu >= (max_dist + 1) * HOPS_BASE
+    ):
+        cols = {"source_id": [], "node": [], "dist": [], "hops": []}
+    else:
+        cols = {
+            "source_id": [0], "node": [target],
+            "dist": [mu // HOPS_BASE], "hops": [mu % HOPS_BASE],
+        }
+    return local.build(
+        spark, cols, "source_id long, node long, dist long, hops long"
     )
 
 
 def _p2p_driver(
-    spark, e2: DataFrame, source: int, target: int,
-    max_dist: int | None, max_rounds: int,
-) -> DataFrame:
-    """Exact numpy replay of point_to_point's bidirectional loop for
-    DRIVER_EDGES-gated graphs: the same direction-tagged relaxation, the
-    same per-round candidate cap min(mu, max_dist), the same mu fold from
-    newly-improved labels against the other side's updated settled set, and
-    the same two termination tests — so mu, the round count and the error
-    contract match the distributed loop exactly."""
-    import pandas as pd
-
+    table, source: int, target: int, max_dist: int | None, max_rounds: int,
+) -> int:
+    """Exact numpy replay of point_to_point's bidirectional loop over the
+    fetched direction-tagged edge table, for DRIVER_EDGES-gated graphs: the
+    same relaxation, the same per-round candidate cap min(mu, max_dist), the
+    same mu fold from newly-improved labels against the other side's
+    updated settled set, and the same two termination tests — so mu (the
+    returned best meeting label), the round count and the error contract
+    match the distributed loop exactly."""
     global LAST_ROUNDS
-    pdf = e2.toPandas()  # reads the agg-materialized checkpoint
-    eu_ids = pdf["u"].to_numpy(dtype=np.int64)
-    ev_ids = pdf["v"].to_numpy(dtype=np.int64)
-    wpack = pdf["w"].to_numpy(dtype=np.int64) * HOPS_BASE + 1
-    edir = pdf["dir"].to_numpy(dtype=np.int64)
+    eu_ids = table["u"].to_numpy()
+    ev_ids = table["v"].to_numpy()
+    wpack = table["w"].to_numpy() * HOPS_BASE + 1
+    edir = table["dir"].to_numpy()
     nodes = np.unique(
         np.concatenate(
             [eu_ids, ev_ids, np.asarray([source, target], dtype=np.int64)]
@@ -508,16 +513,7 @@ def _p2p_driver(
             f"point_to_point: not settled after {max_rounds} rounds; raise "
             "max_rounds or bound the query with max_dist"
         )
-    if mu >= INF or (
-        max_dist is not None and mu >= (max_dist + 1) * HOPS_BASE
-    ):
-        return spark.createDataFrame(
-            [], "source_id long, node long, dist long, hops long"
-        )
-    return spark.createDataFrame(
-        [(0, int(target), int(mu) // HOPS_BASE, int(mu) % HOPS_BASE)],
-        "source_id long, node long, dist long, hops long",
-    )
+    return mu
 
 
 def isochrone_cells(

@@ -51,9 +51,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from engine import local
 
 # Horn stencils as focal_stencil weight maps ((dx, dy) -> weight, y up).
 HORN_DZDX = {
@@ -681,50 +684,7 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
     """d8_flow frame -> (gx, gy, d8_dir, src, dst): one row per pixel with
     cell ids packed as src = gx * 2^32 + gy on SHIFTED coords (gx+2^20,
     gy+2^20 — keeps ids positive for tile coords within +-2^20); dst is
-    null for sinks.
-
-    r6: a flow frame carrying its collected pandas twin (_driver_pdf, set
-    by the driver halo path) derives the edge frame in numpy — the same
-    explode/offset/pack integer math — and returns it as a local relation
-    (parity pinned in tests/test_terrain.py)."""
-    drv = getattr(flow, "_driver_pdf", None)
-    if drv is not None:
-        import pandas as pd
-
-        offs = np.asarray(_D8_OFFSETS, dtype=np.int64)
-        gxs, gys, dirs, keys = [], [], [], []
-        for tx, ty, dd, kk in zip(
-            drv["tx"], drv["ty"], drv["d8_dir"], drv["d8_key"]
-        ):
-            d = np.asarray(dd, dtype=np.int64)
-            k = np.asarray(kk, dtype=np.int64)
-            pix = np.arange(res * res, dtype=np.int64)
-            gxs.append(int(tx) * res + pix % res)
-            gys.append(int(ty) * res + pix // res)
-            dirs.append(d)
-            keys.append(k)
-        gx = np.concatenate(gxs) if gxs else np.empty(0, dtype=np.int64)
-        gy = np.concatenate(gys) if gys else np.empty(0, dtype=np.int64)
-        d8 = np.concatenate(dirs) if dirs else np.empty(0, dtype=np.int64)
-        dk = np.concatenate(keys) if keys else np.empty(0, dtype=np.int64)
-        off_i = np.int64(1 << 20)
-        pack_np = lambda x, y: (x + off_i) * np.int64(1 << 32) + (y + off_i)  # noqa: E731
-        di = np.clip(d8, 0, 7)
-        dst = pack_np(gx + offs[di, 0], gy + offs[di, 1])
-        out = pd.DataFrame(
-            {
-                "gx": gx, "gy": gy, "d8_dir": d8, "d8_key": dk,
-                "src": pack_np(gx, gy),
-                "dst": pd.array(
-                    np.where(d8 >= 0, dst, 0), dtype="Int64"
-                ),
-            }
-        )
-        out.loc[d8 < 0, "dst"] = pd.NA
-        return flow.sparkSession.createDataFrame(
-            out,
-            "gx long, gy long, d8_dir long, d8_key long, src long, dst long",
-        )
+    null for sinks."""
     cells = flow.select(
         "tx", "ty",
         F.posexplode(F.arrays_zip("d8_dir", "d8_key")).alias("pix", "g"),
@@ -990,21 +950,22 @@ def _pack_np(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
     )
 
 
-def _stage2_driver(edges_pdf, routes_pdf):
+def _stage2_driver(s1) -> dict:
     """Contracted-forest accumulation in numpy on the driver (the bounded-
-    side fast path — edge count is O(raster perimeter / res) and guarded by
-    the caller): reuses _tile_kahn on the edge forest. Returns a pandas
-    frame (entry, mass) of total inflow per tile-entry pixel."""
-    import pandas as pd
+    side fast path — edge count is O(raster perimeter / res) and gated by
+    _STAGE2_DRIVER_EDGES): flattens the stage-1 table's crossing edges and
+    border routes and reuses _tile_kahn on the edge forest. Returns the
+    (entry, mass) columns of total inflow per tile-entry pixel."""
 
-    e_src = edges_pdf["src"].to_numpy(np.int64)
-    e_dst = edges_pdf["dst"].to_numpy(np.int64)
-    e_m0 = edges_pdf["m0"].to_numpy(np.int64)
-    r_entry = routes_pdf["entry"].to_numpy(np.int64)
+    def flat(col):
+        return pc.list_flatten(s1[col]).to_numpy()
+
+    e_src, e_dst, e_m0 = flat("ex_src"), flat("ex_dst"), flat("ex_m0")
+    r_entry = flat("rt_entry")
     order = np.argsort(r_entry)
     r_entry_s = r_entry[order]
-    r_term_s = routes_pdf["term"].to_numpy(np.int64)[order]
-    r_exit_s = routes_pdf["term_exit"].to_numpy(np.int64)[order]
+    r_term_s = flat("rt_term")[order]
+    r_exit_s = flat("rt_exit")[order]
     pos = np.searchsorted(r_entry_s, e_dst)
     if not np.array_equal(r_entry_s[pos], e_dst):
         raise AssertionError(
@@ -1023,19 +984,23 @@ def _stage2_driver(edges_pdf, routes_pdf):
         )
     nxt[m] = eorder[p]
     total = _tile_kahn(nxt, e_m0)  # same kernel, one level up
-    return (
-        pd.DataFrame({"entry": e_dst, "mass": total})
-        .groupby("entry", as_index=False)
-        .sum()
-    )
+    entry, inv = np.unique(e_dst, return_inverse=True)
+    mass = np.zeros(entry.size, dtype=np.int64)
+    np.add.at(mass, inv, total)
+    return {"entry": entry, "mass": mass}
+
+
+# Stage-2 gate of flow_accumulation: a contracted forest at or under this
+# many crossing edges is solved on the driver (_stage2_driver) instead of one
+# Spark job per tile-crossing round. Tests force the distributed delta push
+# by monkeypatching this to 0.
+_STAGE2_DRIVER_EDGES = 2_000_000
 
 
 def flow_accumulation(
     flow: DataFrame,
     res: int,
     max_rounds: int = 512,
-    stage2: str = "auto",
-    stage2_driver_max: int = 2_000_000,
     weight_col: str | None = None,
 ) -> DataFrame:
     """D8 flow accumulation over the tile raster: per pixel, the EXACT number
@@ -1055,10 +1020,10 @@ def flow_accumulation(
        m0 = local_acc[exit pixel] — the tile-internal mass draining out
        through it.
     2. Accumulation on the CONTRACTED forest over tile-entry pixels — two
-       regimes, identical results (stage2='auto' picks by measured edge
-       count; the contracted forest is O(cells/res) rows, 24 B each):
-       'driver' (<= stage2_driver_max edges) collects it and runs the SAME
-       Kahn kernel vectorized in one pass; 'distributed' delta-pushes one
+       regimes, identical results, picked by measured edge count (the
+       contracted forest is O(cells/res) rows, 24 B each): at or under
+       _STAGE2_DRIVER_EDGES it is fetched once (engine.local) and the SAME
+       Kahn kernel runs vectorized in one pass; above, it delta-pushes one
        tile-crossing per round — rounds track the longest path's
        TILE-crossing count (O(tile-grid diameter)), not its cell count;
        each round is one equi-join + one map-side-combined sum over
@@ -1081,20 +1046,13 @@ def flow_accumulation(
 
     spark = flow.sparkSession
     cols = ["tx", "ty", "d8_dir"] + ([weight_col] if weight_col else [])
-    # r6: a flow frame produced by the driver halo path (resolve_flats on a
-    # sub-threshold raster) carries its pandas twin — stage 1 then runs the
-    # SAME kernel directly on it (zero Spark actions) and stage 2 solves on
-    # the driver; stage 3 stays in the returned plan either way
-    _drv_pdf = getattr(flow, "_driver_pdf", None)
+    flow_table = local.carried(flow)
     flow = flow.select(*cols).persist()
 
     def base_mass(pdf, i):
         if weight_col is None:
             return np.ones(res * res, dtype=np.int64)
         return np.asarray(pdf[weight_col].iloc[i], dtype=np.int64)
-
-    def _finish(inflow):
-        return _flowacc_finish(spark, flow, inflow, res, base_mass)
 
     def stage1(batches):
         for pdf in batches:
@@ -1143,108 +1101,51 @@ def flow_accumulation(
         "ex_m0 array<long>, rt_entry array<long>, rt_term array<long>, "
         "rt_exit array<long>"
     )
-    if (
-        _drv_pdf is not None
-        and stage2 in ("auto", "driver")
-        and (weight_col is None or weight_col in _drv_pdf.columns)
-    ):
-        import itertools
-
-        s1_batches = list(stage1([_drv_pdf[cols]]))
-        s1_pdf = (
-            pd.concat(s1_batches, ignore_index=True)
-            if s1_batches
-            else pd.DataFrame(
-                {c: [] for c in (
-                    "tx", "ty", "ex_src", "ex_dst", "ex_m0",
-                    "rt_entry", "rt_term", "rt_exit",
-                )}
-            )
+    if flow_table is not None:
+        # a driver-built flow frame (engine.local, e.g. resolve_flats on a
+        # sub-gate raster): stage 1 runs the SAME kernel on its carried
+        # table, zero Spark actions
+        s1 = local.build(
+            spark, next(stage1([flow_table.select(cols).to_pandas()])),
+            s1_schema,
         )
-
-        def _flatd(col):
-            return list(itertools.chain.from_iterable(s1_pdf[col]))
-
-        edges_pdf = pd.DataFrame(
-            {"src": _flatd("ex_src"), "dst": _flatd("ex_dst"),
-             "m0": _flatd("ex_m0")}
+        n_edges = len(pc.list_flatten(local.fetch(s1)["ex_src"]))
+    else:
+        # lazy truncation: the edge-count probe is the materializing action
+        # (r6 single-action discipline); the checkpoint still caches s1 for
+        # the fetch or the delta push below
+        s1 = flow.mapInPandas(stage1, schema=s1_schema).localCheckpoint(
+            eager=False
         )
-        if len(edges_pdf) <= stage2_driver_max:
-            if len(edges_pdf) == 0:
-                inflow = spark.createDataFrame([], "entry long, mass long")
-            else:
-                routes_pdf = pd.DataFrame(
-                    {"entry": _flatd("rt_entry"), "term": _flatd("rt_term"),
-                     "term_exit": _flatd("rt_exit")}
-                )
-                inflow = spark.createDataFrame(
-                    _stage2_driver(edges_pdf, routes_pdf)
-                )
-            return _finish(inflow)
-        # contracted forest larger than the driver gate (cannot happen for
-        # attribute-gated rasters, but stay safe): fall through distributed
-
-    # lazy truncation: the stage-2 mode probe (edge-count agg) is the
-    # materializing action (r6 single-action discipline); the checkpoint
-    # still caches s1 for the edges/routes fetches below
-    s1 = flow.mapInPandas(stage1, schema=s1_schema).localCheckpoint(
-        eager=False
-    )
-
-    edges = s1.select(
-        F.explode(F.arrays_zip("ex_src", "ex_dst", "ex_m0")).alias("e")
-    ).select(
-        F.col("e.ex_src").alias("src"),
-        F.col("e.ex_dst").alias("dst"),
-        F.col("e.ex_m0").alias("m0"),
-    )
-    routes = s1.select(
-        F.explode(F.arrays_zip("rt_entry", "rt_term", "rt_exit")).alias("r")
-    ).select(
-        F.col("r.rt_entry").alias("entry"),
-        F.col("r.rt_term").alias("term"),
-        F.col("r.rt_exit").alias("term_exit"),
-    )
-    if stage2 not in ("auto", "driver", "distributed"):
-        raise ValueError(f"stage2 must be auto|driver|distributed, got {stage2!r}")
-    mode = stage2
-    if mode == "auto":
         n_edges = s1.agg(
             F.coalesce(F.sum(F.size("ex_src")), F.lit(0)).alias("n")
         ).collect()[0]["n"]
-        mode = "driver" if n_edges <= stage2_driver_max else "distributed"
-    if mode == "driver":
+    if n_edges <= _STAGE2_DRIVER_EDGES:
         # bounded-side fast path: the contracted forest is O(perimeter) =
-        # cells/res rows; under the guard it collects in MBs and the SAME
-        # Kahn kernel solves it in one vectorized pass — vs paying one
-        # Spark job per tile-crossing in the distributed loop (measured
-        # 40+ s of pure round overhead at a 126-crossing worst case).
-        # r6: ONE Arrow fetch of the checkpointed s1 frame (edges + routes
-        # explode in pandas) instead of two separate toPandas jobs.
-        import itertools
-
-        s1_pdf = s1.select(
-            "ex_src", "ex_dst", "ex_m0", "rt_entry", "rt_term", "rt_exit"
-        ).toPandas()
-
-        def _flat(col):
-            return list(itertools.chain.from_iterable(s1_pdf[col]))
-
-        edges_pdf = pd.DataFrame(
-            {"src": _flat("ex_src"), "dst": _flat("ex_dst"),
-             "m0": _flat("ex_m0")}
+        # cells/res rows; it fetches in MBs and the SAME Kahn kernel solves
+        # it in one vectorized pass — vs paying one Spark job per
+        # tile-crossing in the distributed loop (measured 40+ s of pure
+        # round overhead at a 126-crossing worst case)
+        inflow = local.build(
+            spark, _stage2_driver(local.fetch(s1)), "entry long, mass long"
         )
-        if len(edges_pdf) == 0:
-            inflow = spark.createDataFrame([], "entry long, mass long")
-        else:
-            routes_pdf = pd.DataFrame(
-                {"entry": _flat("rt_entry"), "term": _flat("rt_term"),
-                 "term_exit": _flat("rt_exit")}
-            )
-            inflow = spark.createDataFrame(
-                _stage2_driver(edges_pdf, routes_pdf)
-            )
     else:
+        edges = s1.select(
+            F.explode(F.arrays_zip("ex_src", "ex_dst", "ex_m0")).alias("e")
+        ).select(
+            F.col("e.ex_src").alias("src"),
+            F.col("e.ex_dst").alias("dst"),
+            F.col("e.ex_m0").alias("m0"),
+        )
+        routes = s1.select(
+            F.explode(
+                F.arrays_zip("rt_entry", "rt_term", "rt_exit")
+            ).alias("r")
+        ).select(
+            F.col("r.rt_entry").alias("entry"),
+            F.col("r.rt_term").alias("term"),
+            F.col("r.rt_exit").alias("term_exit"),
+        )
         # distributed delta-push: one tile-crossing per round. Contracted
         # hop: entry -> its tile's terminal exit -> that exit's edge's
         # target entry. Entries whose terminal is a sink have no hop row.
@@ -1295,7 +1196,7 @@ def flow_accumulation(
         )
         for r in rounds:
             r.unpersist()
-    return _finish(inflow)
+    return _flowacc_finish(spark, flow, inflow, res, base_mass)
 
 
 def _flowacc_finish(spark, flow, inflow, res, base_mass):
@@ -2422,7 +2323,7 @@ def _halo_fixpoint(
     prev = _digest(state)
     if prev[0] * res * res <= _DRIVER_SOLVE_CELLS:
         return _driver_fixpoint(
-            state.sparkSession, state.toPandas(), res, finish, max_iters, op
+            state.sparkSession, local.fetch(state), res, finish, max_iters, op
         )
     small = prev[0] * res * res * 8 <= _SMALL_STATE_ROWS * 64 * 64 * 8
     for _ in range(max_iters):
@@ -2444,91 +2345,51 @@ def _halo_fixpoint(
     return state
 
 
-# Driver-solve gate for _halo_fixpoint (the flow_accumulation
-# stage2='driver' / knn broadcast-short-circuit discipline): a raster at or
-# under this many cells is a bounded O(MB) Arrow fetch, and every block-
-# Jacobi round below is a numpy sweep instead of a full Spark job — at the
+# Driver-solve gate for _halo_fixpoint (engine.local): a raster at or under
+# this many cells is a bounded O(MB) Arrow fetch, and every block-Jacobi
+# round below is a numpy sweep instead of a full Spark job — at the
 # registry's 512-cell raster the distributed rounds were pure driver
 # latency. 4M cells = 32 MB of int64 state.
 _DRIVER_SOLVE_CELLS = 1 << 22
 
 
 def _driver_fixpoint(
-    spark, pdf, res: int, finish, max_iters: int, op: str
+    spark, table, res: int, finish, max_iters: int, op: str
 ) -> DataFrame:
-    """Driver-side replay of the EXACT block-Jacobi schedule: the same
-    per-tile `finish` kernel, the same synchronous update (every tile reads
+    """Driver-side replay of the EXACT block-Jacobi schedule over the
+    fetched state table: the same per-tile `finish` kernel on the same r=1
+    halos (focal._np_halos), the same synchronous update (every tile reads
     the previous round's neighbor strips), the same state-equality
     convergence test — so the state trajectory, round count and fixpoint
     are bit-identical to the distributed loop; only the transport differs
-    (one Arrow fetch + numpy slices instead of a halo shuffle per round)."""
-    import pandas as pd
+    (one Arrow fetch + numpy slices instead of a halo shuffle per round).
+    The result carries its table, so a following one-shot halo pass (e.g.
+    resolve_flats' assign) runs driver-side too."""
+    from engine.focal import _np_grids, _np_halos
 
-    keys = [(int(t), int(y)) for t, y in zip(pdf["tx"], pdf["ty"])]
-    grids = {
-        k: np.asarray(c, dtype=np.int64).reshape(res, res)
-        for k, c in zip(keys, pdf["counts"])
-    }
+    grids = _np_grids(table, res)
     for _ in range(max_iters):
-        nxt = {}
-        for (tx, ty) in keys:
-            halo = np.zeros((res + 2, res + 2), dtype=np.int64)
-            mask = np.zeros((res + 2, res + 2), dtype=np.int64)
-            halo[1 : res + 1, 1 : res + 1] = grids[(tx, ty)]
-            mask[1 : res + 1, 1 : res + 1] = 1
-            for dx in (-1, 0, 1):
-                for dy in (-1, 0, 1):
-                    if dx == 0 and dy == 0:
-                        continue
-                    nb = grids.get((tx + dx, ty + dy))
-                    if nb is None:
-                        continue
-                    # rows/cols of the neighbor adjacent to this tile
-                    ys = (
-                        slice(0, 1) if dy == 1
-                        else slice(res - 1, res) if dy == -1
-                        else slice(0, res)
-                    )
-                    xs = (
-                        slice(0, 1) if dx == 1
-                        else slice(res - 1, res) if dx == -1
-                        else slice(0, res)
-                    )
-                    hy = (
-                        slice(res + 1, res + 2) if dy == 1
-                        else slice(0, 1) if dy == -1
-                        else slice(1, res + 1)
-                    )
-                    hx = (
-                        slice(res + 1, res + 2) if dx == 1
-                        else slice(0, 1) if dx == -1
-                        else slice(1, res + 1)
-                    )
-                    halo[hy, hx] = nb[ys, xs]
-                    mask[hy, hx] = 1
-            nxt[(tx, ty)] = np.asarray(
-                finish(halo, mask), dtype=np.int64
-            ).reshape(res, res)
-        if all(np.array_equal(nxt[k], grids[k]) for k in keys):
-            grids = nxt
-            break
+        nxt = {
+            key: np.asarray(finish(halo, mask), dtype=np.int64).reshape(
+                res, res
+            )
+            for key, halo, mask in _np_halos(grids, res, 1)
+        }
+        done = all(np.array_equal(nxt[k], grids[k]) for k in grids)
         grids = nxt
+        if done:
+            break
     else:
         raise RuntimeError(f"{op}: no convergence in {max_iters} rounds")
-    out = pd.DataFrame(
+    return local.build(
+        spark,
         {
-            "tx": [k[0] for k in keys],
-            "ty": [k[1] for k in keys],
-            "counts": [grids[k].reshape(-1).tolist() for k in keys],
-        }
+            "tx": [k[0] for k in grids],
+            "ty": [k[1] for k in grids],
+            "counts": [g.reshape(-1) for g in grids.values()],
+        },
+        "tx long, ty long, counts array<long>",
     )
-    res_df = spark.createDataFrame(
-        out, "tx long, ty long, counts array<long>"
-    )
-    # downstream one-shot halo passes (e.g. resolve_flats' assign) can run
-    # driver-side on the already-collected state (focal._halo_apply_driver)
-    res_df._halo_driver_pdf = out
-    return res_df
 
 
 def fill_depressions(

@@ -27,3 +27,10 @@ def test_oracle_keys_subset_of_queries():
 def test_query_runs_at_smallest_sf(spark, name):
     df = entry_mod.queries()[name](spark, SF)
     assert df.count() >= 0  # runs without error; value checks live in the oracle
+
+
+@pytest.mark.parametrize("name", ["raster_field", "routing"])
+def test_query_runs_at_smallest_sf_arrow_off(arrow_off, name):
+    """The queries whose operators take driver-side paths also run on a
+    session with Arrow-based pandas conversion off."""
+    test_query_runs_at_smallest_sf(arrow_off, name)

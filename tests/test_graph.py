@@ -53,6 +53,29 @@ def test_random_graphs_match_bfs(spark, seed, n, m):
     assert _run(spark, n, edges) == _bfs_components(n, edges)
 
 
+def test_driver_vs_distributed_parity(spark, monkeypatch):
+    """The numpy union-find below the edge gate and the star-round loop
+    above it (gate forced to 0) label every node identically."""
+    rng = random.Random(3)
+    edges = [(rng.randrange(100), rng.randrange(100)) for _ in range(160)]
+    e = spark.createDataFrame(edges, ["u", "v"])
+    nodes = spark.range(100).withColumnRenamed("id", "nid")
+
+    def labels():
+        out = graph.connected_components(e, nodes=nodes, id_col="nid")
+        return sorted(map(tuple, out.collect()))
+
+    driver = labels()
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
+    distributed = labels()
+    assert graph.LAST_ROUNDS > 0
+    assert driver == distributed
+
+
+def test_driver_vs_distributed_parity_arrow_off(arrow_off, monkeypatch):
+    test_driver_vs_distributed_parity(arrow_off, monkeypatch)
+
+
 def test_path_graph_converges_fast(spark):
     # a 200-node chain: naive min-label propagation would need 200 rounds;
     # the star alternation must finish well inside max_iters

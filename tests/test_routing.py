@@ -321,3 +321,7 @@ def test_driver_vs_distributed_parity(spark, monkeypatch):
     monkeypatch.setattr(routing, "DRIVER_EDGES", 0)
     dist = run_all()
     assert fast == dist
+
+
+def test_driver_vs_distributed_parity_arrow_off(arrow_off, monkeypatch):
+    test_driver_vs_distributed_parity(arrow_off, monkeypatch)

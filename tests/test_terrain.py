@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from engine import terrain
+from engine import local, terrain
 from tests.conftest import spark  # noqa: F401
 
 
@@ -362,18 +362,36 @@ def _collect_acc(df, res):
     return out
 
 
-@pytest.mark.parametrize("stage2", ["driver", "distributed"])
-def test_flow_accumulation_matches_python_oracle(spark, stage2):
-    """Both stage-2 regimes (driver-collected contracted forest vs the
-    distributed delta-push) against the global python oracle."""
+_STAGE2_SIDES = pytest.mark.parametrize(
+    "stage2_edges",
+    [terrain._STAGE2_DRIVER_EDGES, 0],
+    ids=["driver", "distributed"],
+)
+
+
+@_STAGE2_SIDES
+def test_flow_accumulation_matches_python_oracle(
+    spark, monkeypatch, stage2_edges
+):
+    """Both stage-2 regimes (driver-fetched contracted forest at the default
+    gate vs the distributed delta-push with the gate forced to 0) against
+    the global python oracle."""
+    monkeypatch.setattr(terrain, "_STAGE2_DRIVER_EDGES", stage2_edges)
     rng = random.Random(416)
     res = 8
     tiles = _rand_tiles(rng, res, 9, span=3, density=0.6)
     df = _mk_df(spark, tiles).repartition(5)
-    acc = terrain.flow_accumulation(
-        terrain.d8_flow(df, res), res, stage2=stage2
-    )
+    acc = terrain.flow_accumulation(terrain.d8_flow(df, res), res)
     assert _collect_acc(acc, res) == _py_flow_acc(tiles, res)
+
+
+@_STAGE2_SIDES
+def test_flow_accumulation_matches_python_oracle_arrow_off(
+    arrow_off, monkeypatch, stage2_edges
+):
+    test_flow_accumulation_matches_python_oracle(
+        arrow_off, monkeypatch, stage2_edges
+    )
 
 
 def test_flow_accumulation_partition_invariance(spark):
@@ -3169,11 +3187,17 @@ def test_halo_fixpoint_driver_vs_distributed(spark, monkeypatch):
     assert driver == dist
 
 
+def test_halo_fixpoint_driver_vs_distributed_arrow_off(arrow_off, monkeypatch):
+    test_halo_fixpoint_driver_vs_distributed(arrow_off, monkeypatch)
+
+
 def test_halo_apply_driver_parity(spark):
-    """r6: focal._halo_apply with an attached `_halo_driver_pdf` must emit
-    the exact rows of the distributed strip-shuffle path for every one-shot
-    halo consumer shape: r=1 multi-field (gradients), r>1 single-field
-    (tpi), pass_key (viewshed), and the radius-R EDT."""
+    """r6: focal._halo_apply over a frame carrying its Arrow table
+    (engine.local) must emit the exact rows of the distributed strip-shuffle
+    path for every one-shot halo consumer shape: r=1 multi-field
+    (gradients), r>1 single-field (tpi), pass_key (viewshed), the radius-R
+    EDT, and flow_edges over the driver-built d8 frame (the random 0-9
+    raster has sinks, so dst holds nulls)."""
     import random as _r
 
     res = 8
@@ -3210,8 +3234,9 @@ def test_halo_apply_driver_parity(spark):
         ]
 
     dist = run(tiles)
-    import pandas as pd
-
-    tiles._halo_driver_pdf = tiles.toPandas()
-    drv = run(tiles)
+    drv = run(local.carry(tiles, local.fetch(tiles)))
     assert drv == dist
+
+
+def test_halo_apply_driver_parity_arrow_off(arrow_off):
+    test_halo_apply_driver_parity(arrow_off)

@@ -26,7 +26,7 @@ import numpy as np  # noqa: E402
 def _spark(name: str):
     from engine.session import get_spark
 
-    return get_spark(name, cores=32, shuffle_partitions=32)
+    return get_spark(name)
 
 
 def _vectors(spark, n, dim=64, seed=7, partitions=64):
@@ -2336,10 +2336,14 @@ def part_flowacc() -> None:
     want_interior = F.least(
         F.lit(w - 1) - F.col("gx"), F.lit(w - 1) - F.col("gy")
     ) + 1
-    for mode in ("driver", "distributed"):
+    gate = terrain._STAGE2_DRIVER_EDGES
+    for mode, stage2_edges in (("driver", gate), ("distributed", 0)):
+        # the stage-2 gate picks the regime from the contracted edge count;
+        # 0 forces the distributed delta push
+        terrain._STAGE2_DRIVER_EDGES = stage2_edges
         t0 = time.time()
         flow = terrain.d8_flow(tiles, res)
-        acc = terrain.flow_accumulation(flow, res, stage2=mode)
+        acc = terrain.flow_accumulation(flow, res)
         rows = terrain.stream_cells(acc, res, threshold=1)  # every cell
         agg = rows.agg(
             F.count("*").alias("cells"),
@@ -2366,6 +2370,7 @@ def part_flowacc() -> None:
             "stream_cells_at_res": int(agg["stream_cells"]),
         }
         spark.catalog.clearCache()
+    terrain._STAGE2_DRIVER_EDGES = gate
     tiles.unpersist()
     spark.stop()
     print(_json.dumps(out))
