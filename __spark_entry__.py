@@ -539,9 +539,7 @@ def q_poly_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
                         23, 120, 15, 7, 30, 0.125)
     pb = _overlay_rects(supplier, "s_suppkey", 53, 310, 10, 11, 30,
                         31, 130, 8, 17, 20, 0.375)
-    out = overlay.polygon_overlay_join(
-        pa, pb, convex_a=True, convex_b=True, res_min=3, res_max=8
-    )
+    out = overlay.polygon_overlay_join(pa, pb, res_min=3, res_max=8)
     pairs = out.select(
         F.lit("pair").alias("tag"),
         F.col("a_id").cast("long").alias("a_id"),

@@ -1,10 +1,12 @@
 """Spatial + temporal join operators.
 
-- pip_join: point-in-polygon as cell-cover equi-join + vectorized ray-cast refine —
-  the graft analog of the reference's parent-propagation equi-join
-  (/root/reference/.../SparkJobs.scala:55-62, SURVEY.md §2.4 J1). The rewrite into
-  (broadcastable equi-join + refine filter) happens at plan-construction time; no
-  custom Catalyst rule needed (SURVEY.md §4).
+- pip_join / pip_join_multiring: point-in-polygon as a cell-cover equi-join +
+  exact refine — the graft analog of the reference's parent-propagation
+  equi-join (SparkJobs.scala:55-62, SURVEY.md §2.4 J1). Each cover row carries
+  a parity bit and only the ring edges that can flip a point's even-odd result
+  inside its cell, so the refine folds those few edges and needs no ring join.
+  The rewrite into (broadcastable equi-join + refine filter) happens at
+  plan-construction time; no custom Catalyst rule needed (SURVEY.md §4).
 - knn_join: exact k-nearest-neighbors via grid-cell disk expansion with a distance
   guarantee, brute-force fallback for stragglers (SURVEY.md §2.4 additions).
 - asof_join: as-of/interval assignment via union + window (the reference's temporal
@@ -18,16 +20,18 @@ lat fraction; see engine.cells) — exact, deterministic, and reproducible in AN
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from . import cells
+from . import cells, local
 
 
 # ---------------------------------------------------------------------------
-# Exact point-in-polygon (vectorized even-odd ray cast) — numpy oracle + refine UDF
+# Exact point-in-polygon — numpy even-odd oracle, clipped-edge cover, refine
 # ---------------------------------------------------------------------------
 def np_point_in_polygon(
     px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray
@@ -60,136 +64,66 @@ def np_point_in_multipolygon(
     return inside
 
 
-def polygon_cover(
-    polygons: DataFrame,
-    res_min: int = 7,
-    res_max: int = 11,
-    max_cells: int = 1024,
-    driver_side_limit: int = 5000,
-    classify_interior: bool = True,
-    attach_rings: bool = False,
-    convex: bool = True,
-) -> DataFrame:
-    """(poly_id, res, cell) cover: for each polygon pick the finest res in
-    [res_min, res_max] whose bbox cover stays under max_cells, then emit every grid
-    cell overlapping the bbox. Analog of the reference's bbox-union discipline
-    (Bbox.scala:5-8) used as a join-pruning cover.
+# Margin (degrees) by which a cover cell's bounds are widened before ring edges
+# are classified against them: far above the rounding of the cell encoder's
+# floor((lon + 180) / 360 * 2^res), so every point the encoder puts in a cell
+# lies inside its widened bounds.
+EPS = 1e-9
 
-    classify_interior feeds the ring to _cover_one, which always applies the
-    (concave-safe, hull-based) SAT cull; the 4-corner full_inside
-    classification additionally requires convex=True — for concave rings the
-    cover keeps the cull but leaves full_inside False everywhere (every
-    candidate goes through the exact refine).
-
-    Polygon sets small enough to broadcast (the common case — they are the dim
-    side) are covered driver-side in numpy and shipped as a local DataFrame: zero
-    Python workers, zero serial Arrow startup cost in the hot path. Larger sets
-    fall back to a distributed mapInPandas.
-
-    Size probe = ONE limit(driver_side_limit+1).collect(), not count()-then-
-    collect(): every Spark action costs ~0.5s of fixed scheduling latency on
-    the bench host regardless of row count, and this path runs once per
-    pip_join call — two actions here was the dominant cost of small-polygon
-    joins."""
-    try:
-        rows = (
-            polygons.select("poly_id", "bbox", "ring")
-            .limit(driver_side_limit + 1)
-            .collect()
-        )
-        n_polys = len(rows)
-    except Exception:
-        rows, n_polys = None, driver_side_limit + 1
-    if n_polys <= driver_side_limit:
-        out = []
-        for row in rows:
-            b = row["bbox"]
-            rx = np.array([v["lon"] for v in row["ring"]], dtype=np.float64)
-            ry = np.array([v["lat"] for v in row["ring"]], dtype=np.float64)
-            ring = (
-                [{"lon": float(a), "lat": float(bb)} for a, bb in zip(rx, ry)]
-                if attach_rings
-                else None
-            )
-            pid, res, cc, full = _cover_one(
-                row["poly_id"],
-                b["min"]["lon"], b["min"]["lat"], b["max"]["lon"], b["max"]["lat"],
-                res_min, res_max, max_cells,
-                ring_xs=rx if classify_interior else None,
-                ring_ys=ry if classify_interior else None,
-                convex=convex,
-            )
-            for c, f in zip(cc.tolist(), full.tolist()):
-                rec = {"poly_id": int(pid), "res": int(res), "cell": int(c),
-                       "full_inside": bool(f)}
-                if attach_rings:
-                    # interior rows never evaluate the ray cast (short-circuit),
-                    # so skip their ring payload — shrinks the broadcast ~8x
-                    rec["ring"] = None if f else ring
-                out.append(rec)
-        schema = "poly_id long, res int, cell long, full_inside boolean"
-        if attach_rings:
-            schema += ", ring array<struct<lon:double,lat:double>>"
-        df = polygons.sparkSession.createDataFrame(out, schema=schema)
-        # the cover's resolution set and size are known right here — pin both
-        # on the frame so pip_join never issues a per-call distinct().collect()
-        # and _materialize_if_large never issues a count() action
-        df._pip_used_res = sorted({r["res"] for r in out}) or [res_min]
-        df._pip_known_rows = len(out)
-        return df
-
-    def gen(batches):
-        for pdf in batches:
-            out_poly, out_res, out_cell, out_full = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                b = row.bbox
-                if classify_interior:
-                    rx = np.array([v["lon"] for v in row.ring], dtype=np.float64)
-                    ry = np.array([v["lat"] for v in row.ring], dtype=np.float64)
-                else:
-                    rx = ry = None
-                pid, res, cc, full = _cover_one(
-                    row.poly_id,
-                    b["min"]["lon"], b["min"]["lat"], b["max"]["lon"], b["max"]["lat"],
-                    res_min, res_max, max_cells, ring_xs=rx, ring_ys=ry,
-                    convex=convex,
-                )
-                out_poly.extend([pid] * len(cc))
-                out_res.extend([res] * len(cc))
-                out_cell.extend(cc.tolist())
-                out_full.extend(full.tolist())
-            yield pd.DataFrame({"poly_id": out_poly, "res": out_res,
-                                "cell": out_cell, "full_inside": out_full})
-
-    return polygons.select("poly_id", "bbox", "ring").mapInPandas(
-        gen, schema="poly_id long, res int, cell long, full_inside boolean"
-    )
+_EDGE = pa.struct([(f, pa.float64()) for f in ("xi", "yi", "xj", "yj")])
+_COVER_ARROW = pa.schema([
+    ("poly_id", pa.int64()), ("res", pa.int32()), ("cell", pa.int64()),
+    ("full_inside", pa.bool_()), ("parity", pa.bool_()),
+    ("edges", pa.list_(_EDGE)),
+])
+# the cover relation: one row per kept (polygon, cell), see _cover_one
+COVER_SCHEMA = from_arrow_schema(_COVER_ARROW)
 
 
-def _cover_one(poly_id, lon0, lat0, lon1, lat1, res_min, res_max, max_cells,
-               ring_xs=None, ring_ys=None, convex=True):
-    """Cover of one bbox: finest res whose cell count fits under max_cells.
+def _box_extent(a: np.ndarray, lo: np.ndarray, hi: np.ndarray):
+    """(min, max) of a * x over x in [lo, hi], per (cell, axis): lo/hi are
+    (cells, 1) and may be infinite, a is (axes,); 0 where a == 0."""
+    with np.errstate(invalid="ignore"):
+        p, q = lo * a, hi * a
+    zero = a == 0
+    return np.where(zero, 0.0, np.minimum(p, q)), np.where(zero, 0.0, np.maximum(p, q))
 
-    When the polygon ring is given AND convex=True, each cover cell is
-    classified: full_inside = all 4 cell corners strictly inside -> the whole
-    cell is inside (convexity), so points in it skip the ray-cast refine
-    entirely. Boundary cells are the ~4/sqrt(max_cells) residue that still
-    needs the exact test. For a CONCAVE ring the 4-corner test is unsound (all
-    corners inside does not imply the cell is inside), so convex=False keeps
-    full_inside all-False — every candidate goes through the exact refine. The
-    SAT cull below remains valid for concave rings: separation from the
-    vertex hull implies separation from the polygon (polygon ⊆ hull), so it
-    only ever DROPS provably-disjoint cells.
+
+def _cover_one(poly_id, lon0, lat0, lon1, lat1, res_min, res_max, max_cells, rings):
+    """Cover of one polygon: the cells of its bbox at the finest res whose cell
+    count fits under max_cells, each with the ring edges that decide its points.
+
+    rings: [(xs, ys), ...], one ring or an outer ring and its holes. Their
+    edges are concatenated (the even-odd XOR over all edges equals
+    np_point_in_multipolygon); edge k runs from vertex i to vertex i - 1, the
+    orientation of np_point_in_polygon. Every edge is classified against each
+    cell's bounds widened by EPS, open-ended on the grid border (whose cells
+    also receive the encoder's clamped points):
+
+    - decided false: its y-range misses the cell's band, it is horizontal, or
+      it lies wholly left of the cell — it flips no point of the cell;
+    - decided true: it spans the band and lies wholly right of the cell — it
+      flips every point of the cell, and folds into the cell's parity;
+    - undecided: everything else; the refine evaluates it per point with the
+      same arithmetic as np_point_in_polygon, so the two agree bit for bit.
+
+    A cell with no undecided edge holds only inside points (parity 1:
+    full_inside) or only outside points (parity 0: dropped) — exact for
+    concave rings and holes too. A separating-axis cull against the vertex
+    hull (which contains the even-odd region of any ring set) drops the cells
+    that provably hold no inside point.
+
+    Returns (res, cc, parity, undecided, edges): the kept cells, their parity
+    bits, the (cells, edges) undecided mask and the (4, edges) array of the
+    edges' xi, yi, xj, yj.
 
     Domain: the grid covers lon [-180,180] x lat [-90,90]. A bbox CROSSING
     the edge is fine — the clamped cover equals the cover of bbox∩domain,
     which still contains every grid cell the polygon's in-domain region
-    touches (and a ring crossing the edge still overlaps the edge cells, so
-    the SAT cull keeps them). A bbox ENTIRELY outside the domain is not:
-    clamping collapses it onto the edge row and the SAT cull then rightly
-    drops those cells as hull-disjoint — a silent empty cover, i.e. missed
-    join pairs (caught by the overlay bench's closed form as a 16x pair
-    undercount). Raise loudly for that case instead."""
+    touches. A bbox ENTIRELY outside the domain is not: clamping collapses it
+    onto the edge row and the cull then rightly drops those cells — a silent
+    empty cover, i.e. missed join pairs (caught by the overlay bench's closed
+    form as a 16x pair undercount). Raise loudly for that case instead."""
     if lon1 < -180.0 or lon0 > 180.0 or lat1 < -90.0 or lat0 > 90.0:
         raise ValueError(
             f"polygon {poly_id}: bbox ({lon0},{lat0})..({lon1},{lat1}) lies "
@@ -219,41 +153,124 @@ def _cover_one(poly_id, lon0, lat0, lon1, lat1, res_min, res_max, max_cells,
     x1 = max(0, min(n - 1, int((lon1 + 180) / 360 * n)))
     y0 = max(0, min(n - 1, int((lat0 + 90) / 180 * n)))
     y1 = max(0, min(n - 1, int((lat1 + 90) / 180 * n)))
-    xs = np.arange(x0, x1 + 1, dtype=np.int64)
-    ys = np.arange(y0, y1 + 1, dtype=np.int64)
-    cc = res * cells._RES_SHIFT + (xs[:, None] * cells._IX_SHIFT + ys[None, :]).reshape(-1)
-    if ring_xs is None:
-        return poly_id, res, cc, np.zeros(cc.shape, dtype=bool)
-    # corner coordinates in degrees, flattened to match cc's (xs-major) layout
-    gx0 = np.repeat(xs / n * 360.0 - 180.0, len(ys))
-    gx1 = np.repeat((xs + 1) / n * 360.0 - 180.0, len(ys))
-    gy0 = np.tile(ys / n * 180.0 - 90.0, len(xs))
-    gy1 = np.tile((ys + 1) / n * 180.0 - 90.0, len(xs))
-    if convex:
-        full = (
-            np_point_in_polygon(gx0, gy0, ring_xs, ring_ys)
-            & np_point_in_polygon(gx0, gy1, ring_xs, ring_ys)
-            & np_point_in_polygon(gx1, gy0, ring_xs, ring_ys)
-            & np_point_in_polygon(gx1, gy1, ring_xs, ring_ys)
+    ix = np.repeat(np.arange(x0, x1 + 1, dtype=np.int64), y1 - y0 + 1)
+    iy = np.tile(np.arange(y0, y1 + 1, dtype=np.int64), x1 - x0 + 1)
+    cc = res * cells._RES_SHIFT + ix * cells._IX_SHIFT + iy
+    # widened cell bounds as (cells, 1) columns against (edges,) rows
+    bx0 = np.where(ix == 0, -np.inf, ix / n * 360.0 - 180.0 - EPS)[:, None]
+    bx1 = np.where(ix == n - 1, np.inf, (ix + 1) / n * 360.0 - 180.0 + EPS)[:, None]
+    by0 = np.where(iy == 0, -np.inf, iy / n * 180.0 - 90.0 - EPS)[:, None]
+    by1 = np.where(iy == n - 1, np.inf, (iy + 1) / n * 180.0 - 90.0 + EPS)[:, None]
+    xi = np.concatenate([xs for xs, _ in rings])
+    yi = np.concatenate([ys for _, ys in rings])
+    xj = np.concatenate([np.roll(xs, 1) for xs, _ in rings])
+    yj = np.concatenate([np.roll(ys, 1) for _, ys in rings])
+    xlo, xhi = np.minimum(xi, xj), np.maximum(xi, xj)
+    ylo, yhi = np.minimum(yi, yj), np.maximum(yi, yj)
+    never = (yi == yj) | (yhi < by0) | (ylo > by1) | (xhi < bx0)
+    always = (ylo < by0) & (yhi > by1) & (xlo > bx1)
+    undecided = ~(never | always)
+    parity = always.sum(axis=1) % 2 == 1
+    keep = undecided.any(axis=1) | parity
+    # separating-axis cull along every edge normal
+    ax, ay = yi - yj, xj - xi
+    proj = ax[:, None] * xi[None, :] + ay[:, None] * yi[None, :]
+    xmin, xmax = _box_extent(ax, bx0, bx1)
+    ymin, ymax = _box_extent(ay, by0, by1)
+    overlap = (xmax + ymax >= proj.min(axis=1)) & (xmin + ymin <= proj.max(axis=1))
+    keep &= overlap.all(axis=1)
+    return res, cc[keep], parity[keep], undecided[keep], np.stack([xi, yi, xj, yj])
+
+
+def _cover_table(rows, res_min: int, res_max: int, max_cells: int) -> pa.Table:
+    """Cover (COVER_SCHEMA) of polygon rows {poly_id, bbox, rings}, rings as
+    lists of {lon, lat} vertex lists: one row per kept cell, its undecided
+    edges as its `edges` list."""
+    pids, ress, ccs, pars, counts = (
+        [np.empty(0, dtype=t)] for t in (np.int64, np.int32, np.int64, bool, np.int64)
+    )
+    edges = [np.empty((4, 0))]
+    for row in rows:
+        b = row["bbox"]
+        rings = [
+            (np.array([v["lon"] for v in r], dtype=np.float64),
+             np.array([v["lat"] for v in r], dtype=np.float64))
+            for r in row["rings"]
+        ]
+        res, cc, parity, undecided, e = _cover_one(
+            row["poly_id"], b["min"]["lon"], b["min"]["lat"], b["max"]["lon"],
+            b["max"]["lat"], res_min, res_max, max_cells, rings,
         )
-    else:
-        full = np.zeros(cc.shape, dtype=bool)
-    # SAT cull (convex polygon vs axis-aligned cell): a cell separated from the
-    # polygon along any edge-normal axis cannot contain inside points -> drop it
-    # from the cover entirely (bbox corners of an ellipse-ish polygon are ~20%
-    # of the cover; dropping them cuts candidate volume before the join).
-    keep = np.ones(cc.shape, dtype=bool)
-    nv = len(ring_xs)
-    for i in range(nv):
-        j = (i + 1) % nv
-        a = -(ring_ys[j] - ring_ys[i])
-        b = ring_xs[j] - ring_xs[i]
-        poly_proj = a * ring_xs + b * ring_ys
-        pmin, pmax = poly_proj.min(), poly_proj.max()
-        cell_min = np.minimum(a * gx0, a * gx1) + np.minimum(b * gy0, b * gy1)
-        cell_max = np.maximum(a * gx0, a * gx1) + np.maximum(b * gy0, b * gy1)
-        keep &= (cell_max >= pmin) & (cell_min <= pmax)
-    return poly_id, res, cc[keep], full[keep]
+        pids.append(np.full(len(cc), row["poly_id"], dtype=np.int64))
+        ress.append(np.full(len(cc), res, dtype=np.int32))
+        ccs.append(cc)
+        pars.append(parity)
+        counts.append(undecided.sum(axis=1))
+        edges.append(e[:, np.nonzero(undecided)[1]])  # row-major: cell by cell
+    count, parity = np.concatenate(counts), np.concatenate(pars)
+    flat = np.concatenate(edges, axis=1)
+    offsets = np.concatenate([[0], np.cumsum(count)]).astype(np.int32)
+    edge_lists = pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.StructArray.from_arrays([pa.array(c) for c in flat], fields=list(_EDGE)),
+    )
+    return pa.table({
+        "poly_id": np.concatenate(pids),
+        "res": np.concatenate(ress),
+        "cell": np.concatenate(ccs),
+        "full_inside": parity & (count == 0),
+        "parity": parity,
+        "edges": edge_lists,
+    }, schema=_COVER_ARROW)
+
+
+def _cover(polygons: DataFrame, rings: Column, res_min: int, res_max: int,
+           max_cells: int, driver_side_limit: int) -> DataFrame:
+    """COVER_SCHEMA cover of (poly_id, bbox) polygons whose ring list is
+    `rings`. Polygon sets small enough to broadcast (the common case — they
+    are the dim side) are covered on the driver from one fetch (one Spark
+    job: the fetch doubles as the size probe) and built as a local relation
+    from Arrow columns, which pins the cover's resolution set, row count and
+    polygon count on the frame. Larger sets run a distributed mapInArrow."""
+    src = polygons.select("poly_id", "bbox", rings.alias("rings"))
+    try:
+        fetched = local.fetch(src.limit(driver_side_limit + 1))
+    except AnalysisException:  # a frame that cannot be fetched, e.g. a stream
+        fetched = None
+    if fetched is not None and fetched.num_rows <= driver_side_limit:
+        table = _cover_table(fetched.to_pylist(), res_min, res_max, max_cells)
+        df = local.build(polygons.sparkSession, table, COVER_SCHEMA)
+        # pinned so pip_join never issues a per-call distinct().collect() and
+        # _materialize_if_large never issues a count()
+        df._pip_used_res = sorted(set(table["res"].to_pylist())) or [res_min]
+        df._pip_known_rows = table.num_rows
+        df._pip_n_polys = fetched.num_rows
+        return df
+
+    def gen(batches):
+        for batch in batches:
+            yield from _cover_table(
+                batch.to_pylist(), res_min, res_max, max_cells
+            ).to_batches()
+
+    return src.mapInArrow(gen, COVER_SCHEMA)
+
+
+def polygon_cover(
+    polygons: DataFrame,
+    res_min: int = 7,
+    res_max: int = 11,
+    max_cells: int = 1024,
+    driver_side_limit: int = 5000,
+) -> DataFrame:
+    """(poly_id, res, cell, full_inside, parity, edges) cover of single-ring
+    polygons (poly_id, bbox, ring): for each polygon the finest res in
+    [res_min, res_max] whose bbox cover stays under max_cells, minus the
+    cells that provably hold no inside point; each kept cell carries the
+    edges that decide its points (_cover_one). Analog of the reference's
+    bbox-union discipline (Bbox.scala:5-8) used as a join-pruning cover."""
+    return _cover(polygons, F.array(F.col("ring")), res_min, res_max,
+                  max_cells, driver_side_limit)
 
 
 _COVER_TMP_DIRS: list[str] = []
@@ -283,17 +300,15 @@ def cleanup_cover_dirs() -> int:
 
 def _materialize_if_large(
     cover: DataFrame, threshold: int = 20000, force: bool = False,
-    known_rows: int | None = None,
 ) -> DataFrame:
     """A driver-built cover is a LocalRelation: it gets re-serialized by the
-    single-threaded driver into every job that uses it (measured ~10s of serial
-    time per run for a 200k-row cover with ring payloads — the dominant Amdahl
-    term). Covers above `threshold` rows are written once per pip_join call to a
-    temp parquet and read back, so every action on the returned plan references
-    a (tiny, distributed, cacheable) scan instead of embedding the rows.
+    single-threaded driver into every job that uses it. Covers above
+    `threshold` rows are written once to a temp parquet and read back, so
+    every action on the returned plan references a (tiny, distributed,
+    cacheable) scan instead of embedding the rows.
 
     force=True materializes regardless of plan shape — used for DISTRIBUTED
-    (mapInPandas) covers that feed multiple consumers (used_res probe + the
+    (mapInArrow) covers that feed multiple consumers (used_res probe + the
     join itself), so the cover is computed once, not per consumer. Temp dirs
     are tracked and removed at process exit (cleanup_cover_dirs)."""
     import atexit
@@ -302,13 +317,12 @@ def _materialize_if_large(
     global _COVER_ATEXIT_REGISTERED
 
     used_res = getattr(cover, "_pip_used_res", None)
-    if known_rows is None:
-        known_rows = getattr(cover, "_pip_known_rows", None)
+    known_rows = getattr(cover, "_pip_known_rows", None)
     if not force:
-        # driver-built covers pass their row count (they just built the rows
-        # in python) — the under-threshold decision then costs ZERO Spark
-        # actions instead of a plan-toString + count per pip call (~0.5s of
-        # serial driver latency per join on this host)
+        # driver-built covers carry their row count (they just built the
+        # rows) — the under-threshold decision then costs ZERO Spark actions
+        # instead of a plan-toString + count per pip call (each Spark action
+        # is ~0.5 s of fixed serial driver latency at local[32])
         if known_rows is not None:
             if known_rows <= threshold:
                 return cover
@@ -331,329 +345,36 @@ def _materialize_if_large(
     return out
 
 
-def pip_refine_udf(poly_rings: dict[int, tuple[np.ndarray, np.ndarray]]):
-    """pandas_udf (poly_id, lon, lat) -> bool exact inside-test. `poly_rings` is a
-    driver-side dict broadcast into the closure (polygon side is a dim table)."""
+def _inside_expr(lon: Column, lat: Column) -> Column:
+    """Exact even-odd test of a candidate (point, cover row): the row's parity
+    XOR the crossings of its undecided edges, each with np_point_in_polygon's
+    edge test term for term, so the two agree bit for bit on the same doubles.
+    A full_inside row (no undecided edge) short-circuits the fold. The fold
+    runs JVM-side with no Python workers."""
 
-    @F.pandas_udf(T.BooleanType())
-    def _refine(poly_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = np.zeros(len(poly_id), dtype=bool)
-        pid = poly_id.to_numpy(np.int64)
-        px = lon.to_numpy(np.float64)
-        py = lat.to_numpy(np.float64)
-        for p in np.unique(pid):
-            ring = poly_rings.get(int(p))
-            if ring is None:
-                continue
-            m = pid == p
-            out[m] = np_point_in_polygon(px[m], py[m], ring[0], ring[1])
-        return pd.Series(out)
-
-    return _refine
-
-
-def raycast_inside_expr(ring: Column, lon: Column, lat: Column) -> Column:
-    """Even-odd ray cast as a Column aggregate over the ring's edges — JVM-side, no
-    Python workers. (An unrolled CASE-per-edge variant was measured 4x SLOWER —
-    the giant expression tree falls out of whole-stage codegen; the HOF form stays
-    compact.) Semantically identical to np_point_in_polygon (same edge test, same
-    division), so the two paths agree bit-for-bit on the same doubles."""
-    n = F.size(ring)
-    idx = F.sequence(F.lit(1), n)
-
-    def edge_crossing(acc: Column, i: Column) -> Column:
-        vi = F.element_at(ring, i)
-        vj = F.element_at(ring, F.when(i == 1, n).otherwise(i - 1))
-        xi, yi = vi.getField("lon"), vi.getField("lat")
-        xj, yj = vj.getField("lon"), vj.getField("lat")
+    def flip(acc: Column, e: Column) -> Column:
+        xi, yi, xj, yj = (e.getField(f) for f in ("xi", "yi", "xj", "yj"))
         crosses = (yi > lat) != (yj > lat)
         x_int = (xj - xi) * (lat - yi) / (yj - yi) + xi
+        # CASE, not `acc != (...)`: Spark 4.1's optimizer pushes the XOR form
+        # onto the cover side of the join, where lon/lat do not exist
         return F.when(crosses & (lon < x_int), ~acc).otherwise(acc)
 
-    return F.aggregate(idx, F.lit(False), edge_crossing)
+    return F.col("full_inside") | F.aggregate("edges", F.col("parity"), flip)
 
 
-def raycast_inside_rings_expr(rings: Column, lon: Column, lat: Column) -> Column:
-    """Even-odd containment over an array<array<struct<lon,lat>>> of edge loops
-    (outer + holes): XOR-fold of the single-ring ray cast — JVM-side, same
-    HOF discipline as raycast_inside_expr."""
-    return F.aggregate(
-        rings,
-        F.lit(False),
-        lambda acc, ring: acc != raycast_inside_expr(ring, lon, lat),  # boolean XOR
-    )
-
-
-def _multiring_cover_one(poly_id, b, rings, res_min, res_max, max_cells,
-                         assume_convex):
-    """Cover rows for ONE multipolygon: cover + full_inside against the OUTER
-    ring (convexity-gated — see _cover_one), then full_inside revoked for any
-    cover cell whose bbox intersects a hole's bbox (conservative: such cells
-    fall back to the exact even-odd multi-ring ray cast)."""
-    pid, res, cc, full = _cover_one(
-        poly_id,
-        b["min"]["lon"], b["min"]["lat"], b["max"]["lon"], b["max"]["lat"],
-        res_min, res_max, max_cells,
-        ring_xs=rings[0][0], ring_ys=rings[0][1], convex=assume_convex,
-    )
-    n = 2**res
-    ix = (cc - res * cells._RES_SHIFT) // cells._IX_SHIFT
-    iy = cc % cells._IX_SHIFT
-    cx0, cx1 = ix / n * 360.0 - 180.0, (ix + 1) / n * 360.0 - 180.0
-    cy0, cy1 = iy / n * 180.0 - 90.0, (iy + 1) / n * 180.0 - 90.0
-    for hx, hy in rings[1:]:
-        hx0, hx1, hy0, hy1 = hx.min(), hx.max(), hy.min(), hy.max()
-        touches_hole = (cx1 >= hx0) & (cx0 <= hx1) & (cy1 >= hy0) & (cy0 <= hy1)
-        full &= ~touches_hole
-    return pid, res, cc, full
-
-
-def _np_rings(raw) -> list[tuple[np.ndarray, np.ndarray]]:
-    return [
-        (
-            np.array([v["lon"] for v in ring], dtype=np.float64),
-            np.array([v["lat"] for v in ring], dtype=np.float64),
-        )
-        for ring in raw
-    ]
-
-
-def multiring_cover(
-    polygons: DataFrame,
-    rings_col: str = "rings",
-    res_min: int = 7,
-    res_max: int = 11,
-    max_cells: int = 1024,
-    driver_side_limit: int = 5000,
-    assume_convex: bool = True,
-    n_polys: int | None = None,
-) -> DataFrame:
-    """(poly_id, res, cell, full_inside) cover for multipolygons — the multiring
-    twin of polygon_cover, with the same two physical strategies: sets small
-    enough to broadcast are covered driver-side (zero Python workers in the hot
-    path); larger sets run a distributed mapInPandas over the polygon rows and
-    are materialized once to parquet (no driver collect at any size).
-
-    n_polys: pass the polygon count if the caller already knows it — skips the
-    size probe entirely. Otherwise ONE limit(driver_side_limit+1).collect()
-    serves as both probe and driver-side fetch (see polygon_cover: each Spark
-    action costs ~0.5s fixed latency on the bench host). The returned cover
-    carries `_pip_n_polys` so pip_join_multiring never re-counts."""
-    rows = None
-    if n_polys is None:
-        try:
-            rows = (
-                polygons.select("poly_id", "bbox", rings_col)
-                .limit(driver_side_limit + 1)
-                .collect()
-            )
-            n_polys = len(rows)
-        except Exception:
-            n_polys = driver_side_limit + 1
-    if n_polys <= driver_side_limit:
-        if rows is None:
-            rows = polygons.select("poly_id", "bbox", rings_col).collect()
-        out = []
-        for row in rows:
-            pid, res, cc, full = _multiring_cover_one(
-                row["poly_id"], row["bbox"], _np_rings(row[rings_col]),
-                res_min, res_max, max_cells, assume_convex,
-            )
-            for c, f in zip(cc.tolist(), full.tolist()):
-                out.append({"poly_id": int(pid), "res": int(res), "cell": int(c),
-                            "full_inside": bool(f)})
-        df = polygons.sparkSession.createDataFrame(
-            out, schema="poly_id long, res int, cell long, full_inside boolean"
-        )
-        df._pip_used_res = sorted({r["res"] for r in out}) or [res_min]
-        df._pip_n_polys = n_polys
-        out_df = _materialize_if_large(df, known_rows=len(out))
-        out_df._pip_n_polys = n_polys
-        return out_df
-
-    def gen(batches):
-        import json
-
-        for pdf in batches:
-            out_poly, out_res, out_cell, out_full = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                pid, res, cc, full = _multiring_cover_one(
-                    row.poly_id, row.bbox, _np_rings(json.loads(row.rings_json)),
-                    res_min, res_max, max_cells, assume_convex,
-                )
-                out_poly.extend([pid] * len(cc))
-                out_res.extend([res] * len(cc))
-                out_cell.extend(cc.tolist())
-                out_full.extend(full.tolist())
-            yield pd.DataFrame({"poly_id": out_poly, "res": out_res,
-                                "cell": out_cell, "full_inside": out_full})
-
-    # rings cross the Arrow boundary as JSON: pandas conversion of the ragged
-    # array<array<struct>> column (outer ring + differently-sized holes) trips
-    # numpy's inhomogeneous-shape check; a string column is shape-free
-    dist = polygons.select(
-        "poly_id", "bbox", F.to_json(F.col(rings_col)).alias("rings_json")
-    ).mapInPandas(
-        gen, schema="poly_id long, res int, cell long, full_inside boolean"
-    )
-    # materialize once: the cover feeds two consumers (used_res probe + join);
-    # without this the mapInPandas cover would be recomputed per consumer
-    return _materialize_if_large(dist, force=True)
-
-
-def pip_join_multiring(
-    points: DataFrame,
-    polygons: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res_min: int = 7,
-    res_max: int = 11,
-    max_cells: int = 1024,
-    rings_col: str = "rings",
-    assume_convex: bool = True,
-    driver_side_limit: int = 5000,
-    broadcast_cover: bool | None = None,
-) -> DataFrame:
-    """Point-in-MULTIPOLYGON join: polygons carry `rings_col` =
-    array<array<struct<lon,lat>>> — rings[0] the outer ring, rings[1:] holes
-    (OSM relation outer/inner member roles, ObjectVersion.scala relations).
-
-    Same plan shape as pip_join: bbox cell-cover equi-join on (res, cell) +
-    codegen'd even-odd refine over all rings, with the same two regimes:
-    a broadcastable polygon set ships a driver-built cover + broadcast ring
-    dim (no point-side shuffle); a larger set builds the cover DISTRIBUTED
-    (multiring_cover's mapInPandas path — no .collect() anywhere) and degrades
-    to shuffled equi-joins on (res, cell) and poly_id, which AQE handles.
-
-    assume_convex gates the outer-ring full_inside classification exactly like
-    pip_join: concave OUTER rings (the general OSM relation case) must pass
-    False, leaving every candidate to the exact refine — all 4 corners of a
-    cell being inside a concave ring does NOT imply the cell is inside."""
-    cover = multiring_cover(
-        polygons, rings_col, res_min, res_max, max_cells,
-        driver_side_limit=driver_side_limit, assume_convex=assume_convex,
-    )
-    # the cover's size probe already determined which regime we're in — read
-    # it back instead of paying a second count() action on the polygon side
-    n_polys = getattr(cover, "_pip_n_polys", driver_side_limit + 1)
-    if broadcast_cover is None:
-        broadcast_cover = n_polys <= driver_side_limit
-    used_res = getattr(cover, "_pip_used_res", None) or sorted(
-        r["res"] for r in cover.select("res").distinct().collect()
-    ) or [res_min]
-    enc = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("res"),
-                cells.grid_encode_lonlat(F.col(lon_col), F.col(lat_col), r).alias("cell"),
-            )
-            for r in used_res
-        ]
-    )
-    pts_exp = points.select("*", F.explode(enc).alias("_rc")).select(
-        "*", F.col("_rc.res").alias("_pip_res"), F.col("_rc.cell").alias("_pip_cell")
-    ).drop("_rc")
-    cover = cover.withColumnRenamed("res", "_pip_res").withColumnRenamed(
-        "cell", "_pip_cell"
-    )
-    rings_dim = polygons.select("poly_id", rings_col)
-    if broadcast_cover:
-        # a polygon set small enough to broadcast as a cover is small enough
-        # to broadcast as a ring dim (rings are one row per polygon)
-        cover = F.broadcast(cover)
-        rings_dim = F.broadcast(rings_dim)
-    cand = pts_exp.join(cover, ["_pip_res", "_pip_cell"], "inner").join(
-        rings_dim, "poly_id"
-    )
-    keep = F.col("full_inside") | raycast_inside_rings_expr(
-        F.col(rings_col), F.col(lon_col), F.col(lat_col)
-    )
-    return cand.filter(keep).drop("_pip_res", "_pip_cell", "full_inside", rings_col)
-
-
-def collect_poly_rings(polygons: DataFrame) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    rows = polygons.select("poly_id", "ring").collect()
-    return {
-        int(r["poly_id"]): (
-            np.array([v["lon"] for v in r["ring"]], dtype=np.float64),
-            np.array([v["lat"] for v in r["ring"]], dtype=np.float64),
-        )
-        for r in rows
-    }
-
-
-def build_pip_cover(
-    polygons: DataFrame,
-    res_min: int = 7,
-    res_max: int = 11,
-    max_cells: int = 1024,
-    exact: bool = True,
-    refine_impl: str = "native",
-    assume_convex: bool = True,
-) -> DataFrame:
-    """Build (and materialize) the cover relation for pip_join once, so callers
-    that join MANY point partitions against the SAME polygons (e.g. the
-    checkpointed pipeline's per-unit loop, jobs/run_pipeline.py) pay the
-    driver-side cover build a single time and every per-unit job broadcasts a
-    cached parquet scan instead of re-deriving the cover.
-
-    Rings do NOT ride in the cover (native refine joins them from a tiny
-    poly_id-keyed broadcast dim instead): a per-boundary-cell ring copy
-    multiplied the broadcast payload ~10x, and the broadcast build is driver-
-    serial — the dominant Amdahl term of the N-vs-4N scaling gate."""
-    cover = polygon_cover(
-        polygons, res_min, res_max, max_cells=max_cells,
-        classify_interior=exact,
-        attach_rings=False,
-        convex=assume_convex,
-    )
-    return _materialize_if_large(cover)
-
-
-def pip_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res_min: int = 7,
-    res_max: int = 11,
-    broadcast_cover: bool = True,
-    exact: bool = True,
-    refine_impl: str = "native",
-    assume_convex: bool = True,
-    max_cells: int = 1024,
-    cover: DataFrame | None = None,
-) -> DataFrame:
-    """Point-in-polygon join: returns `points` columns + poly_id for every
-    (point, polygon) containment pair.
-
-    Plan shape (scale rationale): the huge point side is touched exactly once — a
-    per-res cell encode (pure Column int math, codegen'd) + an equi-join against the
-    broadcast cover. No point-side shuffle at all when the cover broadcasts; with
-    broadcast_cover=False it degrades to a shuffled equi-join on `cell` (still an
-    equi-join — AQE skew handling applies; pair with engine.skew salting for hot
-    cells). The exact ray-cast refine runs on the (much smaller) candidate set only:
-
-    - refine_impl="native" (default): ring attached via a second broadcast join and
-      ray-cast evaluated as a Column aggregate over edges — stays inside
-      whole-stage codegen, zero Python workers (measured ~5x better multi-core
-      scaling than the UDF path, which oversubscribes CPUs with python workers);
-    - refine_impl="pandas_udf": Arrow-batched numpy ray-cast (kept for parity and
-      for polygon sets too large to carry rings through the join).
-    """
-    if cover is None:
-        cover = build_pip_cover(
-            polygons, res_min, res_max, max_cells=max_cells,
-            exact=exact, refine_impl=refine_impl, assume_convex=assume_convex,
-        )
+def _pip_probe(points: DataFrame, cover: DataFrame, lon_col: str, lat_col: str,
+               res_min: int, broadcast_cover: bool, exact: bool = True) -> DataFrame:
+    """points x cover: explode each point's cell at every resolution the
+    cover uses, equi-join on (res, cell), keep the rows _inside_expr accepts
+    (all candidate rows when exact=False). Returns points' columns + poly_id."""
     # Single scan of the point side: explode each point's (res, cell) only for the
     # resolutions the cover actually uses (usually 1-3 of the res_min..res_max
     # range), one equi-join on (res, cell). (A union of per-res joins would scan
     # the points once per level and multiply task count; exploding unused levels
-    # multiplies candidate volume.) The res set is pinned on the cover frame by
-    # polygon_cover/build_pip_cover; the distinct().collect() below only fires
-    # for a caller-supplied cover that lacks it (one action per call was pure
-    # serial driver cost in per-unit pipeline loops).
+    # multiplies candidate volume.) The res set is pinned on driver-built cover
+    # frames; the distinct().collect() below only fires for a cover that lacks
+    # it (one action per call was pure serial driver cost in per-unit loops).
     used_res = getattr(cover, "_pip_used_res", None) or sorted(
         r["res"] for r in cover.select("res").distinct().collect()
     ) or [res_min]
@@ -678,42 +399,110 @@ def pip_join(
     )
     if broadcast_cover:
         cover = F.broadcast(cover)
-    if not exact:
-        return (
-            pts_exp.join(cover, ["_pip_res", "_pip_cell"], "inner")
-            .drop("_pip_res", "_pip_cell", "full_inside")
-        )
-    if refine_impl == "native":
-        # Two broadcast hash joins over a single point-side scan: the scalar
-        # cover on (res, cell), then the ring dim on poly_id. Keeping rings OUT
-        # of the per-cell cover (one ring per polygon, not one per boundary
-        # cell) cuts the driver-serial broadcast build ~10x — the Amdahl term
-        # the N-vs-4N scaling gate divides by.
-        # `full_inside OR raycast` short-circuits in codegen: points in proven
-        # interior cells (the vast majority at max_cells=1024) never run the ray
-        # cast; only the ~4/sqrt(max_cells) boundary-cell residue pays it.
-        cand = pts_exp.join(cover, ["_pip_res", "_pip_cell"], "inner")
-        if "ring" not in cand.columns:
-            rings_dim = polygons.select("poly_id", "ring")
-            # a polygon set too large to broadcast as a cover is too large to
-            # broadcast as a ring dim: degrade to the shuffled equi-join on
-            # poly_id together with the cover (AQE handles both)
-            if broadcast_cover:
-                rings_dim = F.broadcast(rings_dim)
-            cand = cand.join(rings_dim, "poly_id")
-        keep = F.col("full_inside") | raycast_inside_expr(
-            F.col("ring"), F.col(lon_col), F.col(lat_col)
-        )
-        return cand.filter(keep).drop("_pip_res", "_pip_cell", "full_inside", "ring")
-    cand = pts_exp.join(cover, ["_pip_res", "_pip_cell"], "inner").drop(
-        "_pip_res", "_pip_cell"
+    cand = pts_exp.join(cover, ["_pip_res", "_pip_cell"], "inner")
+    if exact:
+        cand = cand.filter(_inside_expr(F.col(lon_col), F.col(lat_col)))
+    return cand.drop("_pip_res", "_pip_cell", "full_inside", "parity", "edges")
+
+
+def multiring_cover(
+    polygons: DataFrame,
+    rings_col: str = "rings",
+    res_min: int = 7,
+    res_max: int = 11,
+    max_cells: int = 1024,
+    driver_side_limit: int = 5000,
+) -> DataFrame:
+    """polygon_cover for multipolygons, whose `rings_col` holds the outer ring
+    and its holes; the edges of all rings are classified together. A
+    driver-built cover over 20k rows and every distributed one are
+    materialized once to parquet (the distributed one would otherwise be
+    recomputed per consumer). The returned cover carries `_pip_n_polys` (the
+    size probe's count, or driver_side_limit + 1 past the gate) so
+    pip_join_multiring never re-counts."""
+    cover = _cover(polygons, F.col(rings_col), res_min, res_max, max_cells,
+                   driver_side_limit)
+    n_polys = getattr(cover, "_pip_n_polys", None)
+    out = _materialize_if_large(cover, force=n_polys is None)
+    out._pip_n_polys = driver_side_limit + 1 if n_polys is None else n_polys
+    return out
+
+
+def pip_join_multiring(
+    points: DataFrame,
+    polygons: DataFrame,
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res_min: int = 7,
+    res_max: int = 11,
+    max_cells: int = 1024,
+    rings_col: str = "rings",
+    driver_side_limit: int = 5000,
+    broadcast_cover: bool | None = None,
+) -> DataFrame:
+    """Point-in-MULTIPOLYGON join: polygons carry `rings_col` =
+    array<array<struct<lon,lat>>> — rings[0] the outer ring, rings[1:] holes
+    (OSM relation outer/inner member roles, ObjectVersion.scala relations);
+    containment is even-odd over all rings, exact for concave rings too.
+
+    Same plan and refine as pip_join, over multiring_cover. A broadcastable
+    polygon set ships a driver-built cover (no point-side shuffle); a larger
+    set builds the cover distributed (no .collect() anywhere) and degrades to
+    a shuffled equi-join on (res, cell), which AQE handles."""
+    cover = multiring_cover(
+        polygons, rings_col, res_min, res_max, max_cells,
+        driver_side_limit=driver_side_limit,
     )
-    rings = collect_poly_rings(polygons)
-    refine = pip_refine_udf(rings)
-    keep = F.col("full_inside") | refine(
-        F.col("poly_id"), F.col(lon_col), F.col(lat_col)
-    )
-    return cand.filter(keep).drop("full_inside")
+    if broadcast_cover is None:
+        broadcast_cover = cover._pip_n_polys <= driver_side_limit
+    return _pip_probe(points, cover, lon_col, lat_col, res_min, broadcast_cover)
+
+
+def build_pip_cover(
+    polygons: DataFrame,
+    res_min: int = 7,
+    res_max: int = 11,
+    max_cells: int = 1024,
+) -> DataFrame:
+    """Build (and materialize) the cover relation for pip_join once, so callers
+    that join MANY point partitions against the SAME polygons (e.g. the
+    checkpointed pipeline's per-unit loop, jobs/run_pipeline.py) pay the
+    driver-side cover build a single time and every per-unit job broadcasts a
+    cached parquet scan instead of re-deriving the cover."""
+    return _materialize_if_large(polygon_cover(polygons, res_min, res_max, max_cells))
+
+
+def pip_join(
+    points: DataFrame,
+    polygons: DataFrame,
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res_min: int = 7,
+    res_max: int = 11,
+    broadcast_cover: bool = True,
+    exact: bool = True,
+    max_cells: int = 1024,
+    cover: DataFrame | None = None,
+) -> DataFrame:
+    """Point-in-polygon join: returns `points` columns + poly_id for every
+    (point, polygon) containment pair, exact (even-odd, concave rings too).
+
+    Plan shape (scale rationale): the huge point side is touched exactly once — a
+    per-res cell encode (pure Column int math, codegen'd) + an equi-join against the
+    broadcast cover. No point-side shuffle at all when the cover broadcasts; with
+    broadcast_cover=False it degrades to a shuffled equi-join on `cell` (still an
+    equi-join — AQE skew handling applies; pair with engine.skew salting for hot
+    cells). The refine runs on the candidate rows only and needs nothing but
+    the cover row: its parity bit XOR the crossings of the few ring edges that
+    pass through the cell (about one on average), folded JVM-side; rows of
+    full_inside cells skip it. No ring join, no full-ring ray cast.
+
+    cover: a build_pip_cover(polygons) result to reuse across calls (polygons
+    is then not read). exact=False returns every candidate row unrefined.
+    """
+    if cover is None:
+        cover = build_pip_cover(polygons, res_min, res_max, max_cells=max_cells)
+    return _pip_probe(points, cover, lon_col, lat_col, res_min, broadcast_cover, exact)
 
 
 # ---------------------------------------------------------------------------

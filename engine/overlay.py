@@ -21,13 +21,14 @@ Plan shape:
   pending pairs + rings         -- two dim joins attach ring payloads late
   mapInPandas refine            -- exact segment-cross + even-odd vertex test
 
-Soundness of the blocking: regions that intersect have intersecting bboxes,
-every cover contains all grid cells overlapping its polygon's bbox at the
-polygon's chosen res, and grid_ancestor is monotone — so any common point's
-blocking-res cell appears in both normalized covers. The fast accept fires
-only when both joined cover rows are full_inside and one original cell is an
-ancestor of the other (the finer cell is then a subset of BOTH regions, a
-certificate of intersection); everything else goes through the exact test.
+Soundness of the blocking: every cover keeps each cell at its polygon's
+chosen res that the polygon's region or boundary touches (it drops only
+cells that lie outside with no ring edge near them), and grid_ancestor is
+monotone — so any common point's blocking-res cell appears in both
+normalized covers. The fast accept fires only when both joined cover rows
+are full_inside and one original cell is an ancestor of the other (the finer
+cell is then a subset of BOTH regions, a certificate of intersection);
+everything else goes through the exact test.
 
 At 100 TB: both polygon sets may be large (neither needs to broadcast — set
 broadcast_cover=False for a shuffled cell join); candidate volume is bounded
@@ -147,8 +148,6 @@ def polygon_overlay_join(
     res_min: int = 4,
     res_max: int = 11,
     max_cells: int = 256,
-    convex_a: bool = False,
-    convex_b: bool = False,
     broadcast_cover: bool = True,
     broadcast_rings: bool = True,
 ) -> DataFrame:
@@ -160,20 +159,17 @@ def polygon_overlay_join(
     'contains' (A's region contains B's, holes respected, no boundary
     contact). Returns (a_id, b_id), exact.
 
-    convex_a/convex_b unlock the 4-corner full_inside classification in the
-    cover (sound only for convex rings) and with it the Column-only
-    fast-accept for nested interior cells; concave inputs keep the default
-    False and simply send every candidate pair through the exact refine.
-    broadcast_cover broadcasts the B cover into the cell join (B is the
-    smaller side by convention); broadcast_rings broadcasts both ring dims
-    into the late payload attach. Set either False at very large polygon
-    counts for shuffled equi-joins instead.
+    The covers classify their cells exactly for any ring (full_inside cells
+    lie wholly inside the region), which feeds the Column-only fast-accept
+    for nested interior cells. broadcast_cover broadcasts the B cover into
+    the cell join (B is the smaller side by convention); broadcast_rings
+    broadcasts both ring dims into the late payload attach. Set either
+    False at very large polygon counts for shuffled equi-joins instead.
     """
     if predicate not in ("intersects", "contains"):
         raise ValueError(f"unknown predicate {predicate!r}")
     pairs = _blocked_pairs(
-        polys_a, polys_b, res_min, res_max, max_cells,
-        convex_a, convex_b, broadcast_cover,
+        polys_a, polys_b, res_min, res_max, max_cells, broadcast_cover,
     )
 
     if predicate == "intersects":
@@ -217,8 +213,6 @@ def _blocked_pairs(
     res_min: int,
     res_max: int,
     max_cells: int,
-    convex_a: bool,
-    convex_b: bool,
     broadcast_cover: bool,
 ) -> DataFrame:
     """Candidate (a_id, b_id, _accepted) pairs via the cell-cover blocking:
@@ -228,19 +222,12 @@ def _blocked_pairs(
     fast accept); 0 means unknown — run the exact pair kernel."""
     from . import joins
 
-    cov_kwargs = dict(res_min=res_min, res_max=res_max, max_cells=max_cells)
-    if "rings" in polys_a.columns:
-        cov_a = joins.multiring_cover(polys_a, **cov_kwargs)
-    else:
-        cov_a = joins.polygon_cover(
-            polys_a, classify_interior=True, convex=convex_a, **cov_kwargs
-        )
-    if "rings" in polys_b.columns:
-        cov_b = joins.multiring_cover(polys_b, **cov_kwargs)
-    else:
-        cov_b = joins.polygon_cover(
-            polys_b, classify_interior=True, convex=convex_b, **cov_kwargs
-        )
+    def _cover(polys: DataFrame) -> DataFrame:
+        if "rings" in polys.columns:
+            return joins.multiring_cover(polys, "rings", res_min, res_max, max_cells)
+        return joins.polygon_cover(polys, res_min, res_max, max_cells)
+
+    cov_a, cov_b = _cover(polys_a), _cover(polys_b)
 
     def _min_res(cov: DataFrame) -> int:
         pinned = getattr(cov, "_pip_used_res", None)
@@ -353,7 +340,6 @@ def polygon_area_overlay_join(
     res_min: int = 4,
     res_max: int = 11,
     max_cells: int = 256,
-    convex_a: bool = False,
     broadcast_cover: bool = True,
     broadcast_rings: bool = True,
 ) -> DataFrame:
@@ -372,8 +358,7 @@ def polygon_area_overlay_join(
     pair in Arrow batches. Boundary-touch pairs (area 0) are dropped —
     that's the measure-zero difference from predicate='intersects'."""
     pairs = _blocked_pairs(
-        polys_a, polys_b, res_min, res_max, max_cells,
-        convex_a, True, broadcast_cover,
+        polys_a, polys_b, res_min, res_max, max_cells, broadcast_cover,
     ).select("a_id", "b_id")
     ra = _as_rings_frame(polys_a, "a_id")
     rb = _as_rings_frame(polys_b, "b_id")

@@ -65,10 +65,11 @@ def streaming_pip_counts(
     watermark: str = "30 minutes",
 ) -> DataFrame:
     """Streaming point-in-polygon: incoming images -> phash anchors -> the SAME
-    pip_join plan as batch (stream-static broadcast join: the cover and ring
-    dim are static broadcasts, so the stream side never shuffles before the
-    windowed agg) -> watermarked per-(window, polygon) counts. The batch ==
-    streaming equality is asserted in tests/test_streaming.py."""
+    pip_join plan as batch (stream-static broadcast join: the cover, which
+    carries everything the exact refine reads, is a static broadcast, so the
+    stream side never shuffles before the windowed agg) -> watermarked
+    per-(window, polygon) counts. The batch == streaming equality is asserted
+    in tests/test_streaming.py."""
     from . import joins
 
     pts = (

@@ -751,7 +751,7 @@ def geofence_transitions_pip(
 ) -> DataFrame:
     """Geofence transitions against POLYGON zones: the rect path's
     composition with the real PIP machinery — fixes run through
-    engine.joins.pip_join (cover broadcast equi-join + exact ray-cast
+    engine.joins.pip_join (cover broadcast equi-join + exact clipped-edge
     refine; polygons = (poly_id, ring, bbox) as everywhere), per-fix zone
     sets assemble with one (entity, ts) collect_set aggregation (fixes in
     no polygon keep an empty set — they drive exits), and the transition

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from engine.overlay import (
+    _blocked_pairs,
     np_rings_relate,
     np_segments_intersect_any,
     overlay_brute_force,
@@ -202,7 +203,8 @@ class TestOperator:
         assert len(want) > 5
 
     def test_convex_fast_accept_parity(self, spark):
-        # convex rect inputs: fast-accept path must not change the result
+        # rect inputs: pairs the fast accept proves must match the exact
+        # kernel's answer (brute force), and the fast accept must fire
         rng = np.random.default_rng(21)
         rows_a, rows_b = [], []
         for i in range(20):
@@ -213,7 +215,7 @@ class TestOperator:
             x0, y0 = rng.uniform(-50, 30, 2)
             w, h = rng.uniform(2, 10, 2)
             rows_b.append(poly_row(i, [rect(x0, y0, x0 + w, y0 + h)]))
-        # single-ring frames (ring col) unlock convex classification
+        # single-ring frames (ring col)
         ra = [{**r, "ring": r["rings"][0]} for r in rows_a]
         rb = [{**r, "ring": r["rings"][0]} for r in rows_b]
         sch = ("poly_id long, bbox struct<min:struct<lon:double,lat:double>,"
@@ -223,11 +225,12 @@ class TestOperator:
                                     for r in ra], schema=sch)
         pb = spark.createDataFrame([{k: r[k] for k in ("poly_id", "bbox", "ring")}
                                     for r in rb], schema=sch)
-        fast = pairs_set(polygon_overlay_join(
-            pa, pb, convex_a=True, convex_b=True, res_min=3, res_max=9))
-        slow = pairs_set(polygon_overlay_join(pa, pb, res_min=3, res_max=9))
+        fast = pairs_set(polygon_overlay_join(pa, pb, res_min=3, res_max=9))
+        slow = pairs_set(overlay_brute_force(pa, pb))
         assert fast == slow
         assert len(fast) > 10
+        accepted = _blocked_pairs(pa, pb, 3, 9, 256, True).filter("_accepted = 1")
+        assert accepted.count() > 0
 
     def test_shuffled_cover_path(self, spark):
         pa = polys(spark, random_poly_rows(10, seed=31))

@@ -104,15 +104,15 @@ def main() -> int:
     )
     # codegen ids are hidden in formatted output while the AdaptiveSparkPlan is
     # unexecuted; exchange counts are the real structural signal. Design shape:
-    # 2 BroadcastExchanges (scalar cover + 200-row ring dim — rings deliberately
-    # do NOT ride per-cell in the cover, see joins.build_pip_cover) and exactly
-    # 1 shuffle Exchange (the final groupBy) — the POINT side must never
-    # shuffle. Each Exchange appears twice in formatted output (tree + detail).
+    # 1 BroadcastExchange (the cover, whose rows carry their clipped ring
+    # edges: no ring dim, see joins._cover_one) and exactly 1 shuffle
+    # Exchange (the final groupBy) — the POINT side must never shuffle. Each
+    # Exchange appears twice in formatted output (tree + detail).
     n_shuffles = n_shuffles_of(p)
     n_bcast = p.count("BroadcastExchange") // 2
     print(f"  shuffle exchanges: {n_shuffles} (expect 1: final agg); "
-          f"broadcasts: {n_bcast} (expect <=2: cover + ring dim)")
-    ok &= n_shuffles == 1 and n_bcast <= 2
+          f"broadcasts: {n_bcast} (expect 1: the cover)")
+    ok &= n_shuffles == 1 and n_bcast == 1
 
     # 3. agg: partial + final hash aggregate
     agg = li.groupBy("l_returnflag").agg(F.sum("l_quantity"))
